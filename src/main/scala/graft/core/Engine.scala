@@ -42,9 +42,9 @@ object Engine {
             .add("_ingest_epoch", LongType).add("_ingest_seq", LongType)
             .add(Ingest.DeletedCol, BooleanType) // tombstone marker (NULL in data files)
             .add("_part", LongType) // partition column, discovered from dirs
-          spark.read.schema(full).parquet(path)
+          spark.read.options(registry.ioOptions).schema(full).parquet(path)
         case None =>
-          spark.read.option("mergeSchema", "true").parquet(path)
+          spark.read.options(registry.ioOptions).option("mergeSchema", "true").parquet(path)
       }
     }
 
@@ -132,8 +132,7 @@ object Engine {
         else if (smallTable) folded.coalesce(1).sortWithinPartitions("_part")
         else folded.repartition(col("_part"))
       val tmp = registry.tablePath(typeId) + ".compact"
-      val writer = out.write.mode("overwrite")
-        .option(Ingest.NoJobMarker._1, Ingest.NoJobMarker._2)
+      val writer = out.write.mode("overwrite").options(Ingest.writeOptions(registry))
       (if (hasPart) writer.partitionBy("_part") else writer).parquet(tmp)
       registry.replaceTable(typeId, tmp)
     }
@@ -173,7 +172,12 @@ object Engine {
     /** Compact when the physical file count exceeds `maxFiles` — a
       * metadata-only check (one directory listing, no data jobs), the
       * policy a maintenance loop runs after streaming appends pile up
-      * small files. Returns true when a compaction ran. */
+      * small files. Returns true when a compaction ran.
+      *
+      * A compaction leaves one file per non-empty id bucket, up to
+      * [[Ingest.NumIdBuckets]]. With `maxFiles` below that count, a
+      * just-compacted table is already over the threshold, so the next
+      * check compacts it again: the trigger counts files, not appends. */
     def compactIfNeeded(typeId: String, maxFiles: Int = 64): Boolean = {
       val n = registry.dataFileCount(typeId)
       val needed = n > maxFiles
@@ -327,7 +331,7 @@ object Engine {
     // warehouse lives on whatever Hadoop FileSystem the path names
     // (file:, hdfs:, s3a:, ...) — never driver-local java.io
     val p = new org.apache.hadoop.fs.Path(warehouseDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = WarehouseFs.get(spark.sparkContext.hadoopConfiguration, warehouseDir)
     if (overrideWarehouse && fs.exists(p)) fs.delete(p, true)
     fs.mkdirs(p)
     val registry = new SchemaRegistry(spark, warehouseDir, immutableSchema)

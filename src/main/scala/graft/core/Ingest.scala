@@ -123,7 +123,7 @@ object Ingest {
                 message = s"user '${writer.get}' may not ${
                   if (code == "CreateForbidden") "create" else "write"} type '$t'")
               .withColumn("type_id", lit(t))
-              .write.mode("append").option(NoJobMarker._1, NoJobMarker._2)
+              .write.mode("append").options(writeOptions(registry))
               .parquet(registry.quarantinePath(t))
           }
         }
@@ -168,7 +168,7 @@ object Ingest {
   /** Bounded pool for per-type ingest concurrency (driver-side job
     * submission only; the heavy lifting stays on executors). Daemon threads:
     * the pool must never block JVM exit. */
-  private lazy val ingestPool: scala.concurrent.ExecutionContext =
+  private[graft] lazy val ingestPool: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutor(
       java.util.concurrent.Executors.newFixedThreadPool(8, r => {
         val t = new Thread(r, "graft-ingest")
@@ -374,9 +374,7 @@ object Ingest {
                        typeId: String, doomed: DataFrame,
                        deleteTime: java.sql.Timestamp): Long = {
     val tablePath = registry.tablePath(typeId)
-    val tpath = new org.apache.hadoop.fs.Path(tablePath)
-    val hfs = tpath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(hfs.exists(tpath),
+    require(registry.fs.exists(new org.apache.hadoop.fs.Path(tablePath)),
       s"delete from '$typeId': table does not exist")
     val rows = doomed.select(col("id").cast(StringType).as("id")).distinct()
       .withColumn("last_modified", lit(deleteTime))
@@ -393,7 +391,7 @@ object Ingest {
         (if (smallAppend) written.coalesce(1)
          else written.repartition(NumIdBuckets, col("_part")))
           .write.mode("append").partitionBy("_part")
-          .option(NoJobMarker._1, NoJobMarker._2)
+          .options(writeOptions(registry))
           .parquet(tablePath)
       }
       n
@@ -409,6 +407,11 @@ object Ingest {
     * conf; the engine's internal write paths don't need them. */
   val NoJobMarker: (String, String) =
     "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false"
+
+  /** Options of every engine write under the registry's warehouse: the
+    * [[NoJobMarker]] plus the warehouse filesystem ([[WarehouseFs]]). */
+  private[core] def writeOptions(registry: SchemaRegistry): Map[String, String] =
+    registry.ioOptions + NoJobMarker
 
   /** One type's sub-batch: returns (written, quarantined).
     *
@@ -478,7 +481,7 @@ object Ingest {
               corrupt.select(col(corruptCol).as("raw_payload")),
               errno = 400, message = "malformed payload")
             .withColumn("type_id", lit(typeId))
-            .write.mode("append").option(NoJobMarker._1, NoJobMarker._2)
+            .write.mode("append").options(writeOptions(registry))
             .parquet(registry.quarantinePath(typeId))
         (parsed.filter(col(corruptCol).isNull).drop(corruptCol), c)
       } else (parsed, 0L)
@@ -503,7 +506,7 @@ object Ingest {
       // FileOutputCommitter staging directory
       Validation.quarantineRecords(v.quarantined)
         .withColumn("type_id", lit(typeId))
-        .write.mode("append").option(NoJobMarker._1, NoJobMarker._2)
+        .write.mode("append").options(writeOptions(registry))
         .parquet(registry.quarantinePath(typeId))
 
     // 5. Defaults: id (uuid1-hex analog; deterministic content hash also
@@ -545,12 +548,11 @@ object Ingest {
       val tablePath = registry.tablePath(typeId)
       val writeTok = WriteCounts.expect(spark, tablePath)
       val tpath = new org.apache.hadoop.fs.Path(tablePath)
-      val hfs = tpath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       var n = 0L
       // table lock: an append racing a compaction's listing→swap window
       // would otherwise be renamed aside and deleted with the old copy
       registry.withTableLock(typeId) {
-        val existedBefore = hfs.exists(tpath)
+        val existedBefore = registry.fs.exists(tpath)
         // cluster rows by bucket before the partitioned write: ONE file
         // per bucket per append instead of (shuffle partitions × buckets)
         // tiny files — the small-files problem that otherwise eats a
@@ -570,11 +572,11 @@ object Ingest {
         (if (smallAppend) written.coalesce(1)
          else written.repartition(NumIdBuckets, col("_part")))
           .write.mode("append").partitionBy("_part")
-          .option(NoJobMarker._1, NoJobMarker._2)
+          .options(writeOptions(registry))
           .parquet(tablePath)
         n = WriteCounts.take(spark, tablePath, writeTok)
           .getOrElse(written.count())
-        if (n == 0 && !existedBefore) hfs.delete(tpath, true)
+        if (n == 0 && !existedBefore) registry.fs.delete(tpath, true)
       }
       val nQuarantine = subTotal match {
         case Some(total) =>

@@ -25,12 +25,15 @@ final class SchemaRegistry(spark: SparkSession, val warehouseDir: String,
 
   private val cache = TrieMap.empty[String, StructType]
 
-  // All registry IO goes through the Hadoop FileSystem of the warehouse path
-  // (file:, hdfs:, s3a:, ...), never java.io.File — the warehouse is cluster
-  // storage, not driver-local disk.
-  private val fs: org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(warehouseDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  // All warehouse IO goes through the Hadoop FileSystem of the warehouse
+  // path (file:, hdfs:, s3a:, ...), never java.io.File — the warehouse is
+  // cluster storage, not driver-local disk. WarehouseFs picks the
+  // filesystem: `fs` for driver-side metadata IO, `ioOptions` for every
+  // Spark read and write under the warehouse.
+  private[graft] val fs: org.apache.hadoop.fs.FileSystem =
+    WarehouseFs.get(spark.sparkContext.hadoopConfiguration, warehouseDir)
+  private[graft] val ioOptions: Map[String, String] =
+    WarehouseFs.options(spark.sparkContext.hadoopConfiguration, warehouseDir)
   private def hpath(s: String) = new org.apache.hadoop.fs.Path(s)
   private def pathExists(s: String): Boolean = fs.exists(hpath(s))
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.{FileAlreadyExistsException => NioExists, Files, Paths, StandardCopyOption, StandardOpenOption}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FSDataInputStream, Path, PathFilter, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileStatus, FSDataInputStream, Path, PathFilter}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 
@@ -17,8 +17,8 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * partition), which made checkpoint bookkeeping the dominant fixed cost
   * of the declared streaming family. This manager does the SAME
   * write-temp → atomic-rename discipline through java.nio (~0.1 ms), and
-  * delegates `open`/`list` to a CRC-free [[RawLocalFileSystem]] (both
-  * fork-free paths).
+  * delegates `open`/`list` to the CRC-free, fork-free
+  * [[graft.core.NioRawLocalFileSystem]].
   *
   * Semantics match `FileSystemBasedCheckpointFileManager`:
   *  - `createAtomic(p, overwrite)` writes a hidden sibling temp file and
@@ -46,12 +46,13 @@ class LocalCheckpointFileManager(root: Path, conf: Configuration)
   require(Option(root.toUri.getScheme).forall(_ == "file"),
     s"LocalCheckpointFileManager only handles file: paths, got $root")
 
-  // fork-free delegate for the Hadoop-typed read surface (open needs a
-  // Seekable stream; list needs FileStatus objects). RawLocal (not the
-  // checksummed LocalFileSystem): no .crc shadow files, and its statuses
-  // load permissions lazily — never touched by the streaming callers.
+  // delegate for the Hadoop-typed read surface (open needs a Seekable
+  // stream; list needs FileStatus objects). Raw (not checksummed): the
+  // manager writes no .crc shadow files. The raw layer under the
+  // warehouse filesystem: its statuses read permissions through nio, so
+  // no caller of `list` forks `ls -ld`.
   private val rawFs = {
-    val fs = new RawLocalFileSystem()
+    val fs = new graft.core.NioRawLocalFileSystem()
     fs.initialize(java.net.URI.create("file:///"), conf)
     fs
   }

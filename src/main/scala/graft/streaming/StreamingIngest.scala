@@ -3,7 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.core.Engine
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import graft.core.{Engine, Ingest}
 import graft.sources.Codecs
 
 /** Structured-Streaming front end for the ingestion engine.
@@ -88,7 +90,18 @@ object StreamingIngest {
     * type whose physical file count crossed `maxFilesPerType` is compacted
     * (LWW-collapse + crash-safe dir swap). The small-files control loop a
     * long-running streaming ingest needs — the check is one directory
-    * listing per type, so idle batches cost only metadata. */
+    * listing per type, so idle batches cost only metadata.
+    *
+    * Types are independent tables, so their checks and compactions run
+    * concurrently on the bounded [[Ingest.ingestPool]]. The batch waits
+    * for every type before it rethrows the first failure (in type order),
+    * so one failing type never leaves another's compaction running into
+    * the next batch.
+    *
+    * A compaction writes one file per non-empty id bucket (at most
+    * [[Ingest.NumIdBuckets]]). With `maxFilesPerType` below that count, a
+    * just-compacted table is already over the threshold, so the next batch
+    * re-compacts it ([[Engine.Handle.compactIfNeeded]]). */
   def startWithMaintenance(h: Engine.Handle, envelopes: DataFrame,
                            checkpointDir: String, maxFilesPerType: Int = 64,
                            trigger: Trigger = Trigger.AvailableNow(),
@@ -106,8 +119,11 @@ object StreamingIngest {
             case Some(u) => h.ingestAs(u, grants.get, batch)
             case None => h.ingest(batch)
           }
-          h.registry.knownTypes.filterNot(_ == "descriptor_model")
-            .foreach(t => h.compactIfNeeded(t, maxFilesPerType))
+          implicit val ec: ExecutionContext = Ingest.ingestPool
+          val runs = h.registry.knownTypes.filterNot(_ == "descriptor_model")
+            .map(t => Future(h.compactIfNeeded(t, maxFilesPerType)))
+          runs.foreach(Await.ready(_, Duration.Inf))
+          runs.flatMap(_.value.flatMap(_.failed.toOption)).headOption.foreach(throw _)
         } catch {
           case e: Exception =>
             System.err.println(s"[graft-ingest] batch $batchId failed: ${e.getMessage}")

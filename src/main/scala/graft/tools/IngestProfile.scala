@@ -16,7 +16,7 @@ object IngestProfile {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val key = args.headOption.getOrElse("q_engine_ingest")
     val runs = if (args.length > 1) args(1).toInt else 2
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -31,12 +31,7 @@ object IngestProfile {
       .config("spark.sql.streaming.checkpointFileManagerClass",
         sys.env.getOrElse("SPARK_GRAFT_CKPT_MGR",
           "graft.streaming.LocalCheckpointFileManager"))
-    // A/B knob: SPARK_GRAFT_RAWFS=1 swaps file:// to RawLocalFileSystem
-    // (no CRC shadow files) to attribute Hadoop-LocalFS checkpoint cost
-    val spark = (if (sys.env.contains("SPARK_GRAFT_RAWFS"))
-        builder.config("spark.hadoop.fs.file.impl",
-          "org.apache.hadoop.fs.RawLocalFileSystem")
-      else builder).getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).selectExpr("sum(id)").collect()
 
