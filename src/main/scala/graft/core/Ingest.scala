@@ -1,8 +1,10 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration._
 import graft.sources.Codecs
 
 /** The batch ingestion pipeline — the reference's main path re-expressed for
@@ -43,11 +45,11 @@ object Ingest {
              ingestTime: Option[java.sql.Timestamp] = None,
              writer: Option[String] = None,
              grants: Option[DataFrame] = None): Report = {
-    // Bind to the session the batch's actions will actually EXECUTE on:
-    // inside foreachBatch the frame belongs to the micro-batch clone, not
-    // the caller's parent session — a WriteCounts listener registered on
-    // the parent never sees the clone's write commands, silently forcing
-    // the fallback count job every single micro-batch.
+    // Bind to the session that owns the batch: inside foreachBatch that is
+    // the micro-batch's clone of the caller's session, carrying the
+    // stream's SQL conf. Every frame derived below (parse, written frame,
+    // its Observation) is then built and run on that same session, never
+    // on the parent.
     val spark = envelopes.sparkSession
     import spark.implicits._
 
@@ -111,8 +113,7 @@ object Ingest {
       // per-type — but they fan out concurrently on the ingest pool like
       // the admitted path below (VERDICT r19 #5: a mass-deny batch must
       // not pay one SEQUENTIAL driver-blocked job per denied type)
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
+      import scala.concurrent.{ExecutionContext, Future}
       implicit val ec: ExecutionContext = Ingest.ingestPool
       if (denied.nonEmpty) {
         val denyFutures = denied.toSeq.sortBy(_._1).map { case (t, code) =>
@@ -176,126 +177,9 @@ object Ingest {
         t
       }))
 
-  /** Exact row counts of V1 file writes, captured from the write command's
-    * own `numOutputRows` SQL metric (BasicWriteJobStatsTracker aggregates
-    * COMMITTED task stats only — the number the Spark UI shows for the
-    * write; no stage-retry double counting, unlike the executor-level
-    * `recordsWritten` task metric). Lets ingest report the written count
-    * without a separate count job per batch: the listener records every
-    * InsertIntoHadoopFsRelationCommand's (outputPath → rows), and the
-    * writer drains the listener bus before reading its path's entry. A
-    * missing entry falls back to an exact count over the still-cached
-    * frame — the capture is an optimization, never a correctness input. */
-  private object WriteCounts {
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.execution.command.DataWritingCommandExec
-    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    import org.apache.spark.sql.util.QueryExecutionListener
-
-    // every expectation carries a unique token: a late onSuccess arriving
-    // AFTER its take() timed out records (token, rows) for an expectation
-    // that no longer exists, and a LATER take() for the same path must not
-    // mistake that stale entry for its own write — the previous write's
-    // count would corrupt n and the quarantine arithmetic. take() accepts
-    // an entry only when the recorded token is its own.
-    private final case class Capture(token: Long, rows: Long)
-    private val tokens = new java.util.concurrent.atomic.AtomicLong(0L)
-    private val byPath =
-      new java.util.concurrent.ConcurrentHashMap[String, Capture]()
-    // only paths a writer DECLARED interest in are recorded — without this
-    // gate every parquet write in the process (quarantine, streaming
-    // state, bench artifacts, scratch dirs) would grow byPath forever
-    private val expected =
-      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    private val sessions = java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-    private val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit = {
-        // V1 file writes run under AQE in Spark 4: qe.executedPlan's root
-        // is AdaptiveSparkPlanExec and the executed tree hides behind
-        // leaf-like wrappers (AdaptiveSparkPlanExec.executedPlan,
-        // QueryStageExec.plan) whose `children` is empty — a plain
-        // collect over qe.executedPlan sees only the wrapper and the
-        // command match silently never fires. Recurse through the
-        // wrappers; the PHYSICAL DataWritingCommandExec's command
-        // instance carries the task-committed numOutputRows metric (the
-        // logical plan's command is a planning-time copy whose metric
-        // stays 0 — reading it would capture the wrong count).
-        def visit(p: org.apache.spark.sql.execution.SparkPlan): Unit =
-          p.foreach {
-            case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-              visit(a.executedPlan)
-            case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-              visit(q.plan)
-            case w: DataWritingCommandExec => w.cmd match {
-              case i: InsertIntoHadoopFsRelationCommand =>
-                val key = norm(qe.sparkSession, i.outputPath.toString)
-                val tok = expected.get(key)
-                if (tok != null)
-                  w.cmd.metrics.get("numOutputRows").foreach(m =>
-                    byPath.put(key, Capture(tok.longValue(), m.value)))
-              case _ =>
-            }
-            case _ =>
-          }
-        visit(qe.executedPlan)
-      }
-      override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-
-    /** Fully-qualified (scheme + authority + path) key via the path's own
-      * FileSystem — scheme-less normalization collided across filesystems
-      * (file:/x vs hdfs:/x). Qualification resolves the caller's string
-      * and the command's outputPath to the same canonical form. */
-    private def norm(spark: SparkSession, path: String): String = {
-      val u = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .makeQualified(new org.apache.hadoop.fs.Path(path)).toUri
-      // URI.toString is NOT canonical across empty-vs-null authority
-      // ("file:///tmp/x" vs "file:/tmp/x" name the same file but compare
-      // unequal) — the command's outputPath and the caller's string can
-      // arrive in either form. Rebuild from parts with the authority
-      // normalized away when absent/empty.
-      val auth = Option(u.getAuthority).filter(_.nonEmpty)
-      u.getScheme + auth.map("://" + _).getOrElse(":") + u.getPath
-    }
-
-    /** Register the listener (once per session), declare interest in
-      * `path`'s next write, and return the expectation token to pass to
-      * [[take]]. Call BEFORE the write. */
-    def expect(spark: SparkSession, path: String): Long = {
-      sessions.synchronized {
-        if (sessions.add(spark)) spark.listenerManager.register(listener)
-      }
-      val tok = tokens.incrementAndGet()
-      expected.put(norm(spark, path), tok)
-      tok
-    }
-
-    /** Drain the async listener bus, then take this path's captured count
-      * — accepted only if it was recorded for THIS expectation (`token`).
-      * Any failure here (e.g. waitUntilEmpty's TimeoutException on a
-      * backlogged shared bus) degrades to None — the capture is an
-      * optimization; the caller's cached count is the correctness path. */
-    def take(spark: SparkSession, path: String, token: Long): Option[Long] = {
-      val p = norm(spark, path)
-      try org.apache.spark.sql.graftbridge.Bridge
-        .waitListenerBusEmpty(spark.sparkContext, 2000L)
-      catch { case _: Exception => }
-      finally expected.remove(p, java.lang.Long.valueOf(token))
-      val c = byPath.get(p)
-      if (c == null) None
-      else if (c.token == token) { byPath.remove(p, c); Some(c.rows) }
-      // another (newer, still-live) expectation's capture for the same
-      // path — leave it for its owner (ADVICE r12: removing it forced the
-      // concurrent writer into a full recount); listener overwrite on the
-      // next capture bounds growth, so a truly stale entry is harmless
-      else None
-    }
-  }
+  /** Longest wait for an append's observed row count before the exact
+    * recount takes over. */
+  private val ObservationWait = 2.seconds
 
   /** Inference cache: (typeId + " " + batch shape-signature set) → the
     * schema `spark.read.json` inferred for that exact shape set. Sound
@@ -400,8 +284,8 @@ object Ingest {
 
   /** Writer option that suppresses the per-job `_SUCCESS` marker on the
     * engine's OWN table/state writes. The engine's visibility contract is
-    * the table lock + WriteCounts (and streaming's checkpoint commit log),
-    * never the marker — but every micro-batch append pays the marker's
+    * the table lock (and streaming's checkpoint commit log), never the
+    * marker — but every micro-batch append pays the marker's
     * file create (plus its checksum shadow on local FS). External
     * consumers that want markers read the tables through their own session
     * conf; the engine's internal write paths don't need them. */
@@ -414,6 +298,10 @@ object Ingest {
     registry.ioOptions + NoJobMarker
 
   /** One type's sub-batch: returns (written, quarantined).
+    *
+    * The written count comes from an [[org.apache.spark.sql.Observation]]
+    * on the appended frame, filled by the write job itself — no separate
+    * count job.
     *
     * @param subTotal the sub-batch's row count when the caller already has
     *        it (the type fan-out agg does) — lets the quarantine COUNT be
@@ -536,68 +424,71 @@ object Ingest {
     //    them into the bucketed layout.
     val smallAppend = subTotal.exists(_ <= SmallAppendRows)
     val partCol = if (smallAppend) lit(L0Bucket) else idBucket(col("id"))
-    val written = withDefaults.withColumn("_part", partCol).cache()
-    try {
-      // WRITE-FIRST: the append itself materializes the cache, and its
-      // command-level numOutputRows metric reports n — no separate count
-      // job per batch. The old n>0 write pre-gate becomes a post-write
-      // cleanup: table existence is DDL state, so an all-quarantined FIRST
-      // batch must not leave behind the empty dir its append created
-      // (appends to existing tables write only a _SUCCESS marker when
-      // empty — harmless).
-      val tablePath = registry.tablePath(typeId)
-      val writeTok = WriteCounts.expect(spark, tablePath)
-      val tpath = new org.apache.hadoop.fs.Path(tablePath)
-      var n = 0L
-      // table lock: an append racing a compaction's listing→swap window
-      // would otherwise be renamed aside and deleted with the old copy
-      registry.withTableLock(typeId) {
-        val existedBefore = registry.fs.exists(tpath)
-        // cluster rows by bucket before the partitioned write: ONE file
-        // per bucket per append instead of (shuffle partitions × buckets)
-        // tiny files — the small-files problem that otherwise eats a
-        // table alive at 100 TB append rates (compaction still collapses
-        // the per-append log over time)
-        // fixed 16-way sizing, NOT repartition(col) + AQE coalescing: the
-        // adaptive variant re-plans the exchange per write and measured
-        // 2.2 s vs 0.56 s on a streaming-scale append (r14 A/B) — stage
-        // materialization overhead dwarfs the 16 tiny task commits
-        //
-        // Small appends carry a single L0 partition value, so coalesce(1)
-        // writes exactly one file with one commit (the upstream micro
-        // batch is a handful of partitions — collapsing it costs nothing).
-        // Large batches (unknown or > SmallAppendRows) keep the clustered
-        // parallel write — one writer task would serialize a real bulk
-        // ingest on a 1000-executor cluster.
-        (if (smallAppend) written.coalesce(1)
-         else written.repartition(NumIdBuckets, col("_part")))
-          .write.mode("append").partitionBy("_part")
-          .options(writeOptions(registry))
-          .parquet(tablePath)
-        n = WriteCounts.take(spark, tablePath, writeTok)
-          .getOrElse(written.count())
-        if (n == 0 && !existedBefore) registry.fs.delete(tpath, true)
-      }
-      val nQuarantine = subTotal match {
-        case Some(total) =>
-          val arith = total - nCorrupt - n
-          // the arithmetic rests on parser invariants (row-preserving JSON
-          // parse, no top-level arrays — the caller's fan-out agg screens
-          // those); a NEGATIVE result means an invariant broke, so fall
-          // back to the counted path instead of silently skipping the
-          // quarantine write with a wrong Report
-          if (arith >= 0) arith
-          else {
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"arithmetic quarantine count $arith < 0 for type '$typeId' " +
-                s"(total=$total corrupt=$nCorrupt written=$n); " +
-                "falling back to counted quarantine")
-            nQuarantineCounted
-          }
-        case None => nQuarantineCounted
-      }
-      if (nQuarantine > 0) quarantineWrite()
-      (n, nQuarantine + nCorrupt)
-    } finally written.unpersist()
+    val written = withDefaults.withColumn("_part", partCol)
+    // The append's row count, observed in the write's result stage: after
+    // the coalesce/repartition, so it counts each committed task once and
+    // adds no boundary inside the projection pipeline. The default name is
+    // a UUID, so concurrent appends never share an observation.
+    val obs = Observation()
+    // WRITE-FIRST: the count comes from the append itself, so an empty
+    // append is only known after it ran. Table existence is DDL state: an
+    // all-quarantined FIRST batch must not leave behind the empty dir its
+    // append created (an empty append to an existing table is harmless).
+    val tablePath = registry.tablePath(typeId)
+    val tpath = new org.apache.hadoop.fs.Path(tablePath)
+    // table lock: an append racing a compaction's listing→swap window
+    // would otherwise be renamed aside and deleted with the old copy
+    val n = registry.withTableLock(typeId) {
+      val existedBefore = registry.fs.exists(tpath)
+      // cluster rows by bucket before the partitioned write: ONE file
+      // per bucket per append instead of (shuffle partitions × buckets)
+      // tiny files — the small-files problem that otherwise eats a
+      // table alive at 100 TB append rates (compaction still collapses
+      // the per-append log over time)
+      // fixed 16-way sizing, NOT repartition(col) + AQE coalescing: the
+      // adaptive variant re-plans the exchange per write and measured
+      // 2.2 s vs 0.56 s on a streaming-scale append (r14 A/B) — stage
+      // materialization overhead dwarfs the 16 tiny task commits
+      //
+      // Small appends carry a single L0 partition value, so coalesce(1)
+      // writes exactly one file with one commit (the upstream micro
+      // batch is a handful of partitions — collapsing it costs nothing).
+      // Large batches (unknown or > SmallAppendRows) keep the clustered
+      // parallel write — one writer task would serialize a real bulk
+      // ingest on a 1000-executor cluster.
+      (if (smallAppend) written.coalesce(1)
+       else written.repartition(NumIdBuckets, col("_part")))
+        .observe(obs, count(lit(1)))
+        .write.mode("append").partitionBy("_part")
+        .options(writeOptions(registry))
+        .parquet(tablePath)
+      // the observation is normally filled by the time the write returns;
+      // a bounded wait with an exact recount behind it means a lost
+      // metrics update can never hang or miscount a batch
+      val n = try Await.result(obs.future, ObservationWait).getLong(0)
+      catch { case _: TimeoutException => written.count() }
+      if (n == 0 && !existedBefore) registry.fs.delete(tpath, true)
+      n
+    }
+    val nQuarantine = subTotal match {
+      case Some(total) =>
+        val arith = total - nCorrupt - n
+        // the arithmetic rests on parser invariants (row-preserving JSON
+        // parse, no top-level arrays — the caller's fan-out agg screens
+        // those); a NEGATIVE result means an invariant broke, so fall
+        // back to the counted path instead of silently skipping the
+        // quarantine write with a wrong Report
+        if (arith >= 0) arith
+        else {
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"arithmetic quarantine count $arith < 0 for type '$typeId' " +
+              s"(total=$total corrupt=$nCorrupt written=$n); " +
+              "falling back to counted quarantine")
+          nQuarantineCounted
+        }
+      case None => nQuarantineCounted
+    }
+    if (nQuarantine > 0) quarantineWrite()
+    (n, nQuarantine + nCorrupt)
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * default `FileContextBasedCheckpointFileManager` falls back to SHELL
   * FORKS (`chmod`/`ls`) for permission handling on the local filesystem —
   * measured 38 ms per metadata-log write against 0.05 ms of actual file
-  * IO (tools/MetaLogBench). Every micro-batch pays that three-plus times
+  * IO (NOTES.md, Round 12, item 2). Every micro-batch pays that three-plus times
   * (source log, offset WAL, commit log, plus a state-store delta per
   * partition), which made checkpoint bookkeeping the dominant fixed cost
   * of the declared streaming family. This manager does the SAME

@@ -65,25 +65,7 @@ object StreamingIngest {
     // skip every batch): a gated stream without grants is a config error
     require(writer.isEmpty || grants.nonEmpty,
       "start(writer = ...) requires the grants frame")
-    envelopes.writeStream
-      .queryName("graft-ingest")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-batch failure isolation (reference consumer.py:78-83): a
-        // poison batch logs and is skipped; good rows in it were already
-        // split out by the pipeline's quarantine routing
-        try writer match {
-          case Some(u) => h.ingestAs(u, grants.get, batch)
-          case None => h.ingest(batch)
-        }
-        catch {
-          case e: Exception =>
-            System.err.println(s"[graft-ingest] batch $batchId failed: ${e.getMessage}")
-        }
-        ()
-      }
-      .start()
+    run("graft-ingest", h, envelopes, checkpointDir, trigger, writer, grants)(())
   }
 
   /** [[start]] plus post-batch maintenance: after each micro-batch, any
@@ -109,21 +91,36 @@ object StreamingIngest {
                            grants: Option[DataFrame] = None): StreamingQuery = {
     require(writer.isEmpty || grants.nonEmpty,
       "startWithMaintenance(writer = ...) requires the grants frame")
+    run("graft-ingest-maint", h, envelopes, checkpointDir, trigger, writer,
+        grants) {
+      implicit val ec: ExecutionContext = Ingest.ingestPool
+      val runs = h.registry.knownTypes.filterNot(_ == "descriptor_model")
+        .map(t => Future(h.compactIfNeeded(t, maxFilesPerType)))
+      runs.foreach(Await.ready(_, Duration.Inf))
+      runs.flatMap(_.value.flatMap(_.failed.toOption)).headOption.foreach(throw _)
+    }
+  }
+
+  /** The consumer loop both entry points share: each micro-batch runs the
+    * (optionally write-gated) batch ingest, then `afterBatch`. */
+  private def run(name: String, h: Engine.Handle, envelopes: DataFrame,
+                  checkpointDir: String, trigger: Trigger,
+                  writer: Option[String], grants: Option[DataFrame])(
+                  afterBatch: => Unit): StreamingQuery =
     envelopes.writeStream
-      .queryName("graft-ingest-maint")
+      .queryName(name)
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // per-batch failure isolation (reference consumer.py:78-83): a
+        // poison batch logs and is skipped; good rows in it were already
+        // split out by the pipeline's quarantine routing
         try {
           writer match {
             case Some(u) => h.ingestAs(u, grants.get, batch)
             case None => h.ingest(batch)
           }
-          implicit val ec: ExecutionContext = Ingest.ingestPool
-          val runs = h.registry.knownTypes.filterNot(_ == "descriptor_model")
-            .map(t => Future(h.compactIfNeeded(t, maxFilesPerType)))
-          runs.foreach(Await.ready(_, Duration.Inf))
-          runs.flatMap(_.value.flatMap(_.failed.toOption)).headOption.foreach(throw _)
+          afterBatch
         } catch {
           case e: Exception =>
             System.err.println(s"[graft-ingest] batch $batchId failed: ${e.getMessage}")
@@ -131,5 +128,4 @@ object StreamingIngest {
         ()
       }
       .start()
-  }
 }

@@ -558,4 +558,68 @@ class IngestSpec extends SparkSpec {
       val r = new SchemaRegistry(spark, wh); r.bootstrap()
     }
   }
+
+  test("concurrent ingests of one type into one handle: each report counts " +
+      "its own batch, the table holds the sum") {
+    val h = freshEngine()
+    h.ingest(env("""{"type_id":"cc","data":{"id":"seed","v":0}}"""), ingestTime = Some(t0))
+    // distinct sizes and quarantine counts, so a count that lands in the
+    // other thread's report shows
+    def batch(tag: String, good: Int, bad: Int) = env(
+      (0 until good).map(i => s"""{"type_id":"cc","data":{"id":"$tag$i","v":$i}}""") ++
+        (0 until bad).map(i => s"""{"type_id":"cc","data":{"id":"${tag}x$i","v":"bad"}}"""): _*)
+    val sides = Seq(("a", 37, 2), ("b", 53, 5))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(sides.size)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    val rounds = 3
+    try (1 to rounds).foreach { round =>
+      val start = new java.util.concurrent.CyclicBarrier(sides.size)
+      val reports = Await.result(Future.sequence(sides.map { case (tag, good, bad) =>
+        Future {
+          val frame = batch(s"r$round$tag", good, bad)
+          start.await()
+          h.ingest(frame, ingestTime = Some(t1))
+        }
+      }), 5.minutes)
+      sides.zip(reports).foreach { case ((tag, good, bad), r) =>
+        assert(r.perType === Map("cc" -> good.toLong), s"round $round side $tag")
+        assert(r.quarantined === bad.toLong, s"round $round side $tag")
+      }
+    } finally pool.shutdown()
+    assert(h.table("cc").count() === 1L + rounds * sides.map(_._2).sum)
+  }
+
+  test("a warm ingest of a known-shape type runs the fan-out aggregation and " +
+      "the append, and no count job") {
+    val h = freshEngine()
+    def batch(from: Int) = env((from until from + 20).map(i =>
+      s"""{"type_id":"jc","data":{"id":"k$i","v":$i,"s":"x$i"}}"""): _*)
+    // cold batch: creates the table and remembers the batch's shape
+    h.ingest(batch(0), ingestTime = Some(t0))
+    val bridge = org.apache.spark.sql.graftbridge.Bridge
+    bridge.waitListenerBusEmpty(spark.sparkContext, 10000L)
+    // stage names of every job the warm batch starts
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.map(_.name).mkString(" + "))
+    }
+    val hits = Ingest.schemaCacheHits.get()
+    spark.sparkContext.addSparkListener(listener)
+    val r = try {
+      val r = h.ingest(batch(20), ingestTime = Some(t1))
+      bridge.waitListenerBusEmpty(spark.sparkContext, 10000L)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(Ingest.schemaCacheHits.get() === hits + 1, "the warm batch skips inference")
+    assert(r.perType === Map("jc" -> 20L) && r.quarantined === 0L)
+    // the fan-out aggregation is three jobs under AQE (the cached
+    // envelopes' table-cache stage, its shuffle map stage, then the
+    // collect); the append is one. A recount would be a fifth.
+    assert(jobs.size === 4, jobs.toString)
+    assert(h.table("jc").count() === 40L)
+  }
 }

@@ -47,6 +47,49 @@ class StreamingSpec extends SparkSpec {
     assert(h.tableLog("s1").count() === 3)     // append log kept history
   }
 
+  test("h.ingest inside a test foreachBatch reports every micro-batch exactly, " +
+      "on the micro-batch's cloned session") {
+    val srcDir = tmpDir("graft-stream-report-src")
+    writeJsonFiles(srcDir, Seq(
+      Seq(
+        """{"m":{"type_id":"r1","data":{"id":"a","v":1}}}""",
+        """{"m":{"type_id":"r1","data":{"id":"b","v":2}}}""",
+        """{"m":{"type_id":"r2","data":{"id":"a","w":"x"}}}"""),
+      Seq(
+        """{"m":{"type_id":"r1","data":{"id":"c","v":"bad"}}}""", // type conflict
+        """{"m":{"type_id":"r1","data":{"id":"d","v":4}}}""",
+        """{"m":{"data":{"id":"e"}}}"""), // no type_id: dead letter
+      Seq(
+        """{"m":{"type_id":"r2","data":{"id":"b","w":"y"}}}""",
+        """{"m":{"type_id":"r2","data":{"id":"c","w":"z"}}}""",
+        """{"m":{"type_id":"r2","data":{"id":"d"}}}""")))
+    val h = Engine.bootstrap(spark, tmpDir("graft-stream-report-wh"))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Boolean, graft.core.Ingest.Report)]()
+    spark.readStream
+      .schema(StructType(Seq(StructField("m", StringType))))
+      .option("maxFilesPerTrigger", "1")
+      .json(srcDir)
+      .select(col("m").as("message"))
+      .writeStream
+      .option("checkpointLocation", tmpDir("graft-stream-report-ckpt"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+        seen.add((batchId, batch.sparkSession ne spark, h.ingest(batch)))
+        ()
+      }
+      .start()
+      .awaitTermination(120000)
+    import scala.jdk.CollectionConverters._
+    val got = seen.asScala.toSeq.sortBy(_._1)
+    assert(got.map(_._1) === Seq(0L, 1L, 2L))
+    assert(got.forall(_._2), "each micro-batch runs on a clone of the session")
+    assert(got.map(_._3) === Seq(
+      graft.core.Ingest.Report(Map("r1" -> 2L, "r2" -> 1L), deadLetters = 0L, quarantined = 0L),
+      graft.core.Ingest.Report(Map("r1" -> 1L), deadLetters = 1L, quarantined = 1L),
+      graft.core.Ingest.Report(Map("r2" -> 3L), deadLetters = 0L, quarantined = 0L)))
+    assert(h.table("r1").count() === 3L && h.table("r2").count() === 4L)
+  }
+
   test("streaming ingest with compaction maintenance keeps serving correct") {
     val srcDir = tmpDir("graft-stream-maint-src")
     val ckpt = tmpDir("graft-stream-maint-ckpt")
