@@ -48,15 +48,36 @@ object Engine {
       }
     }
 
-    /** Drop ids whose LWW winner is a delete tombstone, then hide the
-      * marker — the read-side half of the tombstone contract
-      * ([[Ingest.DeletedCol]]). Null-safe: rows written before the first
-      * delete surface the marker as NULL. */
-    private def dropTombstones(winners: DataFrame): DataFrame =
-      if (winners.columns.contains(Ingest.DeletedCol))
-        winners.filter(!coalesce(col(Ingest.DeletedCol), lit(false)))
-          .drop(Ingest.DeletedCol)
-      else winners
+    /** [[tableLog]] of a type that must carry the ingest epoch column
+      * (the time-travel and retention paths order by it). */
+    private def epochLog(typeId: String): DataFrame = {
+      val log = tableLog(typeId)
+      require(log.columns.contains("_ingest_epoch"),
+        s"table '$typeId' carries no _ingest_epoch column — not an ingest-written table")
+      log
+    }
+
+    /** The LWW tie-break columns a log carries, in order. */
+    private def ties(log: DataFrame): Seq[String] =
+      Seq("_ingest_epoch", "_ingest_seq").filter(log.columns.contains)
+
+    /** Last-write-wins by `id` over (a filtered view of) a log. */
+    private def lww(log: DataFrame): DataFrame =
+      Upserts.lwwView(log, Seq("id"), "last_modified", ties(log))
+
+    /** Serving shape of LWW winners: drop ids whose winner is a delete
+      * tombstone, then hide the marker — the read-side half of the
+      * tombstone contract ([[Ingest.DeletedCol]]; null-safe: rows written
+      * before the first delete surface the marker as NULL) — and the
+      * ingest bookkeeping columns. */
+    private def served(winners: DataFrame): DataFrame = {
+      val live =
+        if (winners.columns.contains(Ingest.DeletedCol))
+          winners.filter(!coalesce(col(Ingest.DeletedCol), lit(false)))
+            .drop(Ingest.DeletedCol)
+        else winners
+      live.drop("_ingest_epoch", "_ingest_seq", "_part")
+    }
 
     /** Compaction: collapse the append log to its LWW view and atomically
       * swap the table directory (the Cassandra-compaction analog —
@@ -65,9 +86,7 @@ object Engine {
       * ingest tie-break columns, so point lookups still prune and later
       * appends still LWW-merge correctly against compacted rows. */
     def compact(typeId: String): Unit = registry.withTableLock(typeId) {
-      val log = tableLog(typeId)
-      val ties = Seq("_ingest_epoch", "_ingest_seq").filter(log.columns.contains)
-      rewriteLog(typeId, Upserts.lwwView(log, Seq("id"), "last_modified", ties))
+      rewriteLog(typeId, lww(tableLog(typeId)))
     }
 
     /** RETENTION-BOUNDED compaction — Delta/Iceberg VACUUM semantics over
@@ -85,13 +104,8 @@ object Engine {
       * history, fold everything older. */
     def vacuum(typeId: String, horizonEpoch: Long): Unit =
       registry.withTableLock(typeId) {
-        val log = tableLog(typeId)
-        require(log.columns.contains("_ingest_epoch"),
-          s"table '$typeId' carries no _ingest_epoch column — not an ingest-written table")
-        val ties = Seq("_ingest_epoch", "_ingest_seq").filter(log.columns.contains)
-        val collapsed = Upserts.lwwView(
-          log.filter(col("_ingest_epoch") <= horizonEpoch),
-          Seq("id"), "last_modified", ties)
+        val log = epochLog(typeId)
+        val collapsed = lww(log.filter(col("_ingest_epoch") <= horizonEpoch))
         // age out tombstones past the horizon (gc_grace: the horizon must
         // trail the max accepted write lateness — see Ingest.DeletedCol);
         // [[compact]] retains them, only vacuum's explicit boundary drops
@@ -143,12 +157,7 @@ object Engine {
       * position within the batch), so the LAST message of the last batch
       * wins deterministically, matching the reference's sequential consumer
       * order (consumer.py:79-83). */
-    def table(typeId: String): DataFrame = {
-      val log = tableLog(typeId)
-      val ties = Seq("_ingest_epoch", "_ingest_seq").filter(log.columns.contains)
-      dropTombstones(Upserts.lwwView(log, Seq("id"), "last_modified", ties))
-        .drop("_ingest_epoch", "_ingest_seq", "_part")
-    }
+    def table(typeId: String): DataFrame = served(lww(tableLog(typeId)))
 
     /** DELETE by key (reference DELETE /types/{t}/objects/{id},
       * tests/test_views.py:234-241 — delegated to a Cassandra tombstone
@@ -190,10 +199,7 @@ object Engine {
       * the log's epoch column (a min/max-statistics scan, metadata-scale —
       * parquet footers answer it without reading data pages). */
     def currentEpoch(typeId: String): Long = {
-      val log = tableLog(typeId)
-      require(log.columns.contains("_ingest_epoch"),
-        s"table '$typeId' carries no _ingest_epoch column — not an ingest-written table")
-      val r = log.agg(max(col("_ingest_epoch"))).head
+      val r = epochLog(typeId).agg(max(col("_ingest_epoch"))).head
       require(!r.isNullAt(0), s"table '$typeId' log is empty — no epoch to pin")
       r.getLong(0)
     }
@@ -217,16 +223,8 @@ object Engine {
       * versions absent. Pin snapshots you need, or defer compaction —
       * exactly Delta/Iceberg's VACUUM-vs-time-travel trade, re-expressed
       * over the parquet append log. */
-    def tableAsOf(typeId: String, epochMicros: Long): DataFrame = {
-      val log = tableLog(typeId)
-      require(log.columns.contains("_ingest_epoch"),
-        s"table '$typeId' carries no _ingest_epoch column — not an ingest-written table")
-      val ties = Seq("_ingest_epoch", "_ingest_seq").filter(log.columns.contains)
-      dropTombstones(
-        Upserts.lwwView(log.filter(col("_ingest_epoch") <= epochMicros),
-          Seq("id"), "last_modified", ties))
-        .drop("_ingest_epoch", "_ingest_seq", "_part")
-    }
+    def tableAsOf(typeId: String, epochMicros: Long): DataFrame =
+      served(lww(epochLog(typeId).filter(col("_ingest_epoch") <= epochMicros)))
 
     /** VERSION HISTORY of a type's table: every surviving appended version
       * of every id, stamped with a per-id `version` ordinal in LWW order
@@ -238,8 +236,7 @@ object Engine {
       * as [[tableAsOf]]: compaction truncates history to current winners. */
     def history(typeId: String): DataFrame = {
       val log = tableLog(typeId)
-      val ties = Seq("_ingest_epoch", "_ingest_seq").filter(log.columns.contains)
-      val order = (col("last_modified").asc +: ties.map(col(_).asc)): Seq[org.apache.spark.sql.Column]
+      val order = (col("last_modified").asc +: ties(log).map(col(_).asc)): Seq[org.apache.spark.sql.Column]
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("id")).orderBy(order: _*)
       // tombstone versions stay VISIBLE in the audit log (a deletion is a
@@ -284,10 +281,7 @@ object Engine {
           log.filter(col("_part").isin(
             Ingest.idBucket(lit(id)), lit(Ingest.L0Bucket)))
         else log
-      val ties = Seq("_ingest_epoch", "_ingest_seq").filter(log.columns.contains)
-      dropTombstones(Upserts.lwwView(pruned, Seq("id"), "last_modified", ties))
-        .drop("_ingest_epoch", "_ingest_seq", "_part")
-        .filter(col("id") === lit(id))
+      served(lww(pruned)).filter(col("id") === lit(id))
     }
 
     /** Serving JSON: unflatten `a__b` columns to nested objects and drop

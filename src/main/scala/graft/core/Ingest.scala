@@ -62,9 +62,9 @@ object Ingest {
       .select("type_id", "data_json").cache()
     try {
       // the fan-out agg also flags ARRAY payloads per type: a top-level
-      // JSON-array `data` parses to one row PER ELEMENT downstream, which
-      // breaks the row-preserving assumption the arithmetic quarantine
-      // count rests on — such types take the counted fallback. The same
+      // JSON-array `data` parses to one row PER ELEMENT downstream, so the
+      // envelope count is not the sub-batch's row count and cannot pick
+      // the L0 append for it — such types take the bulk write. The same
       // pass collects each type's SHAPE-SIGNATURE set (graft_json_shape —
       // the sound inference cache key; see plans/JsonShape.scala): a batch
       // whose signature set was seen before skips the spark.read.json
@@ -109,32 +109,6 @@ object Ingest {
             .map(t -> _)).toMap
         case None => Map.empty
       }
-      // each denied type quarantines to its OWN table, so the writes stay
-      // per-type — but they fan out concurrently on the ingest pool like
-      // the admitted path below (VERDICT r19 #5: a mass-deny batch must
-      // not pay one SEQUENTIAL driver-blocked job per denied type)
-      import scala.concurrent.{ExecutionContext, Future}
-      implicit val ec: ExecutionContext = Ingest.ingestPool
-      if (denied.nonEmpty) {
-        val denyFutures = denied.toSeq.sortBy(_._1).map { case (t, code) =>
-          Future {
-            Validation.quarantineRecords(
-                cached.filter($"type_id" === t).select("data_json"),
-                errno = 403, error = code,
-                message = s"user '${writer.get}' may not ${
-                  if (code == "CreateForbidden") "create" else "write"} type '$t'")
-              .withColumn("type_id", lit(t))
-              .write.mode("append").options(writeOptions(registry))
-              .parquet(registry.quarantinePath(t))
-          }
-        }
-        Await.result(Future.sequence(denyFutures), Duration.Inf)
-      }
-      val admitted = types.filterNot(denied.contains)
-      // Types are independent (separate tables, separate registry rows with
-      // locked mutations) — fan their sub-batches out concurrently; Spark's
-      // scheduler interleaves the jobs. Mirrors a real cluster where a
-      // driver loop over types would serialize executor idle time.
       val subTotals = typeCounts.filter(!_.isNullAt(0))
         .map(r => r.getString(0) ->
           (if (r.getLong(2) == 0L) Some(r.getLong(1)) else None)).toMap
@@ -149,15 +123,32 @@ object Ingest {
               None
             else Some(sigs.sorted.mkString("\n")))
         }.toMap
-      val futures = admitted.toSeq.map { typeId =>
+      // Types are independent (separate tables, separate registry rows with
+      // locked mutations, a quarantine table each) — fan them out
+      // concurrently; Spark's scheduler interleaves the jobs. A denied type
+      // is one quarantine write, an admitted one a full sub-batch ingest
+      // (VERDICT r19 #5: a mass-deny batch must not pay one SEQUENTIAL
+      // driver-blocked job per denied type).
+      import scala.concurrent.{ExecutionContext, Future}
+      implicit val ec: ExecutionContext = Ingest.ingestPool
+      val futures = types.toSeq.map { typeId =>
         Future {
-          val payloads: Dataset[String] =
-            cached.filter($"type_id" === typeId).select("data_json").as[String]
-          typeId -> ingestType(spark, registry, typeId, payloads, ingestTime,
-            subTotal = subTotals(typeId), shapeSig = shapeSigs(typeId))
+          val payloads = cached.filter($"type_id" === typeId).select("data_json")
+          denied.get(typeId) match {
+            case Some(code) =>
+              writeQuarantine(registry, typeId, Validation.quarantineRecords(
+                payloads, errno = 403, error = code,
+                message = s"user '${writer.get}' may not ${
+                  if (code == "CreateForbidden") "create" else "write"} type '$typeId'"))
+              None
+            case None =>
+              Some(typeId -> ingestType(spark, registry, typeId,
+                payloads.as[String], ingestTime,
+                subTotal = subTotals(typeId), shapeSig = shapeSigs(typeId)))
+          }
         }
       }
-      val results = Await.result(Future.sequence(futures), Duration.Inf)
+      val results = Await.result(Future.sequence(futures), Duration.Inf).flatten
       Report(
         results.map { case (t, (n, _)) => t -> n }.toMap,
         deadLetters,
@@ -177,7 +168,7 @@ object Ingest {
         t
       }))
 
-  /** Longest wait for an append's observed row count before the exact
+  /** Longest wait for an append's observed row counts before the exact
     * recount takes over. */
   private val ObservationWait = 2.seconds
 
@@ -297,21 +288,37 @@ object Ingest {
   private[core] def writeOptions(registry: SchemaRegistry): Map[String, String] =
     registry.ioOptions + NoJobMarker
 
+  /** Append quarantine records to a type's own quarantine table: concurrent
+    * type ingests must not share a FileOutputCommitter staging directory. */
+  private def writeQuarantine(registry: SchemaRegistry, typeId: String,
+                              records: DataFrame): Unit =
+    records.withColumn("type_id", lit(typeId))
+      .write.mode("append").options(writeOptions(registry))
+      .parquet(registry.quarantinePath(typeId))
+
+  /** Row classes of a sub-batch, in the class column every parsed row
+    * carries up to its append: written, quarantined as invalid (a value
+    * that does not coerce to the registered type, or a missing required
+    * field), or dead-lettered as malformed JSON. */
+  private val Good = 0
+  private val Invalid = 1
+  private val Malformed = 2
+  private val ClassCol = "_ingest_class"
+
   /** One type's sub-batch: returns (written, quarantined).
     *
-    * The written count comes from an [[org.apache.spark.sql.Observation]]
-    * on the appended frame, filled by the write job itself — no separate
-    * count job.
+    * Every parsed row gets one class in the class column: good, invalid or
+    * malformed. All rows travel to the append, where one
+    * [[org.apache.spark.sql.Observation]] counts each class in the write
+    * job itself and a filter keeps only the good rows. The invalid and
+    * malformed rows then go to the type's quarantine in one write, only
+    * when there are any. No separate count job runs.
     *
     * @param subTotal the sub-batch's row count when the caller already has
-    *        it (the type fan-out agg does) — lets the quarantine COUNT be
-    *        derived arithmetically (total − corrupt − written; validate is
-    *        an exact two-way split with never-null predicates) instead of
-    *        paying a second full parse→flatten→validate pass per batch.
-    *        The quarantine WRITE still runs, but only when that count > 0.
-    *        MUST be None when any payload is a top-level JSON array — the
-    *        parse then yields one row per ELEMENT and the arithmetic no
-    *        longer holds (the caller's fan-out agg detects this). */
+    *        it (the type fan-out agg does): at or under [[SmallAppendRows]]
+    *        the append lands in L0 as one file. None (unknown, or a batch
+    *        with top-level JSON-array payloads, which parse to one row per
+    *        element) takes the bulk write. */
   def ingestType(spark: SparkSession, registry: SchemaRegistry, typeId: String,
                  payloads: Dataset[String],
                  ingestTime: Option[java.sql.Timestamp],
@@ -355,53 +362,41 @@ object Ingest {
     val parsed =
       if (parsed0.schema.isEmpty) payloads.toDF("__raw").select()
       else parsed0
-    // corrupt-record column appears when some rows are malformed JSON;
-    // the raw payload gets a dead-letter copy in the quarantine table
-    // (reference consumer.py swallow-and-log keeps the raw message), never
-    // a silent drop
+    // the corrupt-record column appears when some rows are malformed JSON;
+    // it holds the raw payload for the dead-letter copy in the quarantine
+    // table (reference consumer.py swallow-and-log keeps the raw message),
+    // never a silent drop, and is never a data column
     val corruptCol = "_corrupt_record"
-    val (clean, nCorrupt) =
-      if (parsed.columns.contains(corruptCol)) {
-        val corrupt = parsed.filter(col(corruptCol).isNotNull)
-        val c = corrupt.count()
-        if (c > 0)
-          Validation.quarantineRecords(
-              corrupt.select(col(corruptCol).as("raw_payload")),
-              errno = 400, message = "malformed payload")
-            .withColumn("type_id", lit(typeId))
-            .write.mode("append").options(writeOptions(registry))
-            .parquet(registry.quarantinePath(typeId))
-        (parsed.filter(col(corruptCol).isNull).drop(corruptCol), c)
-      } else (parsed, 0L)
 
     // 2. Flatten nested objects to `a__b` leaf columns (schemas.py:37-40).
-    val flat = Flattener.flatten(clean)
+    val flat = Flattener.flatten(parsed)
 
     // 3. Evolve the registry add-only with the inferred flat schema
     //    (models.py:138-153). Existing columns keep their registered type.
-    val incoming = StructType(flat.schema.fields.map(f =>
-      f.copy(dataType = Inference.normalize(f.dataType))))
+    val incoming = StructType(flat.schema.fields
+      .filterNot(_.name == corruptCol)
+      .map(f => f.copy(dataType = Inference.normalize(f.dataType))))
     val target = registry.evolve(typeId, incoming)
 
     // 4. Validate/coerce against the registered schema; incompatible rows
     //    are quarantined, not widened (tests/test_models.py:65-83).
-    val v = Validation.validate(flat, target)
-    // quarantine count: arithmetic when the caller supplied the sub-batch
-    // total (no second pipeline pass); counted only as the fallback
-    lazy val nQuarantineCounted = v.quarantined.count()
-    def quarantineWrite(): Unit =
-      // per-type quarantine path: concurrent type ingests must not share a
-      // FileOutputCommitter staging directory
-      Validation.quarantineRecords(v.quarantined)
-        .withColumn("type_id", lit(typeId))
-        .write.mode("append").options(writeOptions(registry))
-        .parquet(registry.quarantinePath(typeId))
+    val (casts, bad) = Validation.validate(flat.schema, target)
+    val validity = when(bad, Invalid).otherwise(Good)
+    val classified = flat.withColumn(ClassCol,
+      if (flat.columns.contains(corruptCol))
+        when(col(corruptCol).isNotNull, Malformed).otherwise(validity)
+      else validity)
+    def isClass(c: Int) = col(ClassCol) === c
+    // count(when(...)), not count_if: count_if's rewrite adds a projection
+    // that splits the append into one more codegen stage
+    val classCounts = Seq(Good -> "written", Invalid -> "invalid",
+      Malformed -> "malformed").map { case (c, name) => count(when(isClass(c), 1)).as(name) }
 
     // 5. Defaults: id (uuid1-hex analog; deterministic content hash also
     //    supported via conf) and last_modified=now (models.py:53-56).
     val lm: org.apache.spark.sql.Column =
       ingestTime.map(t => lit(t)).getOrElse(current_timestamp())
-    val withDefaults = v.good
+    val withDefaults = classified.select(casts :+ col(ClassCol): _*)
       .withColumn("id", coalesce(col("id").cast(StringType),
         regexp_replace(expr("uuid()"), "-", "")))
       .withColumn("last_modified", coalesce(col("last_modified"), lm))
@@ -411,7 +406,9 @@ object Ingest {
       // increasing_id is (partitionId << 33 | rowIdx), which follows source
       // order for ordered inputs (files, replayed logs), so the last message
       // of a batch wins exactly like the reference's sequential consumer
-      // (consumer.py:79-83). Per-ROW expressions, not a plan-time constant.
+      // (consumer.py:79-83). Per-ROW expressions, not a plan-time constant;
+      // numbered before the good-row filter, so quarantined rows leave gaps
+      // that do not change the order.
       .withColumn("_ingest_epoch", lit(batchEpochMicros()))
       .withColumn("_ingest_seq", monotonically_increasing_id())
 
@@ -425,10 +422,10 @@ object Ingest {
     val smallAppend = subTotal.exists(_ <= SmallAppendRows)
     val partCol = if (smallAppend) lit(L0Bucket) else idBucket(col("id"))
     val written = withDefaults.withColumn("_part", partCol)
-    // The append's row count, observed in the write's result stage: after
-    // the coalesce/repartition, so it counts each committed task once and
-    // adds no boundary inside the projection pipeline. The default name is
-    // a UUID, so concurrent appends never share an observation.
+    // The class counts, observed in the write's result stage: after the
+    // coalesce/repartition, so they count each committed task once and add
+    // no boundary inside the projection pipeline. The default name is a
+    // UUID, so concurrent appends never share an observation.
     val obs = Observation()
     // WRITE-FIRST: the count comes from the append itself, so an empty
     // append is only known after it ran. Table existence is DDL state: an
@@ -438,7 +435,7 @@ object Ingest {
     val tpath = new org.apache.hadoop.fs.Path(tablePath)
     // table lock: an append racing a compaction's listing→swap window
     // would otherwise be renamed aside and deleted with the old copy
-    val n = registry.withTableLock(typeId) {
+    val counts = registry.withTableLock(typeId) {
       val existedBefore = registry.fs.exists(tpath)
       // cluster rows by bucket before the partitioned write: ONE file
       // per bucket per append instead of (shuffle partitions × buckets)
@@ -458,37 +455,35 @@ object Ingest {
       // ingest on a 1000-executor cluster.
       (if (smallAppend) written.coalesce(1)
        else written.repartition(NumIdBuckets, col("_part")))
-        .observe(obs, count(lit(1)))
+        .observe(obs, classCounts.head, classCounts.tail: _*)
+        .filter(isClass(Good)).drop(ClassCol)
         .write.mode("append").partitionBy("_part")
         .options(writeOptions(registry))
         .parquet(tablePath)
       // the observation is normally filled by the time the write returns;
       // a bounded wait with an exact recount behind it means a lost
       // metrics update can never hang or miscount a batch
-      val n = try Await.result(obs.future, ObservationWait).getLong(0)
-      catch { case _: TimeoutException => written.count() }
-      if (n == 0 && !existedBefore) registry.fs.delete(tpath, true)
-      n
+      val counts = try Await.result(obs.future, ObservationWait)
+      catch {
+        case _: TimeoutException =>
+          classified.agg(classCounts.head, classCounts.tail: _*).head()
+      }
+      if (counts.getLong(0) == 0 && !existedBefore) registry.fs.delete(tpath, true)
+      counts
     }
-    val nQuarantine = subTotal match {
-      case Some(total) =>
-        val arith = total - nCorrupt - n
-        // the arithmetic rests on parser invariants (row-preserving JSON
-        // parse, no top-level arrays — the caller's fan-out agg screens
-        // those); a NEGATIVE result means an invariant broke, so fall
-        // back to the counted path instead of silently skipping the
-        // quarantine write with a wrong Report
-        if (arith >= 0) arith
-        else {
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"arithmetic quarantine count $arith < 0 for type '$typeId' " +
-              s"(total=$total corrupt=$nCorrupt written=$n); " +
-              "falling back to counted quarantine")
-          nQuarantineCounted
-        }
-      case None => nQuarantineCounted
-    }
-    if (nQuarantine > 0) quarantineWrite()
-    (n, nQuarantine + nCorrupt)
+    val n = counts.getLong(0)
+    val nInvalid = counts.getLong(1)
+    val nMalformed = counts.getLong(2)
+    // one quarantine append for both bad classes, built only from the
+    // classes this batch has: malformed rows keep their raw payload,
+    // invalid rows their flattened, uncoerced values
+    val quarantined =
+      (if (nMalformed > 0) Seq(Validation.quarantineRecords(
+        classified.filter(isClass(Malformed)).select(col(corruptCol).as("raw_payload")),
+        errno = 400, message = "malformed payload")) else Nil) ++
+      (if (nInvalid > 0) Seq(Validation.quarantineRecords(
+        classified.filter(isClass(Invalid)).drop(ClassCol, corruptCol))) else Nil)
+    if (quarantined.nonEmpty) writeQuarantine(registry, typeId, quarantined.reduce(_ union _))
+    (n, nInvalid + nMalformed)
   }
 }

@@ -85,35 +85,23 @@ final class SchemaRegistry(spark: SparkSession, val warehouseDir: String,
     lock.synchronized(body)
   }
 
-  /** Number of data files under a type's table — a recursive listing,
-    * metadata-only (compaction-policy input). */
-  def dataFileCount(typeId: String): Int = {
+  /** Data files under a type's table — a recursive listing, metadata-only,
+    * skipping `_`/`.` names (markers, checksum shadows). */
+  private def dataFiles(typeId: String): Iterator[org.apache.hadoop.fs.LocatedFileStatus] = {
     val root = hpath(tablePath(typeId))
-    if (!fs.exists(root)) return 0
+    if (!fs.exists(root)) return Iterator.empty
     val it = fs.listFiles(root, true)
-    var n = 0
-    while (it.hasNext) {
-      val f = it.next()
-      if (!f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-        n += 1
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).filter { f =>
+      val name = f.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".")
     }
-    n
   }
 
-  /** Total data bytes under a type's table — the same recursive listing
-    * as [[dataFileCount]] (compaction write-sizing input). */
-  def dataBytes(typeId: String): Long = {
-    val root = hpath(tablePath(typeId))
-    if (!fs.exists(root)) return 0L
-    val it = fs.listFiles(root, true)
-    var n = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (!f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-        n += f.getLen
-    }
-    n
-  }
+  /** Number of data files under a type's table (compaction-policy input). */
+  def dataFileCount(typeId: String): Int = dataFiles(typeId).size
+
+  /** Total data bytes under a type's table (compaction write-sizing input). */
+  def dataBytes(typeId: String): Long = dataFiles(typeId).map(_.getLen).sum
 
   private def recoverIfNeeded(): Unit = healPath(descriptorsPath)
 

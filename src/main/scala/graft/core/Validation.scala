@@ -23,21 +23,21 @@ object Validation {
   /** try_cast a column to `dt` (null on failure rather than ANSI error). */
   def tryCastTo(c: Column, dt: DataType): Column = c.try_cast(dt)
 
-  final case class Validated(good: DataFrame, quarantined: DataFrame)
-
-  /** Coerce `df`'s columns to `target`'s types; split rows into good (all
-    * present values coerced, required fields present) and quarantined.
-    * Columns in `target` missing from `df` become NULL columns (schema
-    * evolution fills later rows); extra columns in `df` are kept as-is only
-    * if `keepExtra`. */
-  def validate(df: DataFrame, target: StructType, keepExtra: Boolean = false): Validated = {
-    val have = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    val casts: Seq[(String, Column)] = target.fields.toSeq.map { tf =>
-      have.get(tf.name) match {
-        case None => tf.name -> lit(null).cast(tf.dataType)
-        case Some(src) if src == tf.dataType => tf.name -> col(s"`${tf.name}`")
-        case Some(_) => tf.name -> tryCastTo(col(s"`${tf.name}`"), tf.dataType)
-      }
+  /** Coerce columns of `schema` to `target`'s types. Returns the cast
+    * projection (one column per `target` field, in order) and the row-failure
+    * predicate: true when some present value does not coerce or a required
+    * field is missing. The predicate is never null, so it splits rows exactly
+    * into good and quarantined. Columns in `target` missing from `schema`
+    * project as NULL (schema evolution fills later rows); columns of
+    * `schema` not in `target` are ignored. */
+  def validate(schema: StructType, target: StructType): (Seq[Column], Column) = {
+    val have = schema.fields.map(f => f.name -> f.dataType).toMap
+    val casts: Seq[Column] = target.fields.toSeq.map { tf =>
+      (have.get(tf.name) match {
+        case None => lit(null).cast(tf.dataType)
+        case Some(src) if src == tf.dataType => col(s"`${tf.name}`")
+        case Some(_) => tryCastTo(col(s"`${tf.name}`"), tf.dataType)
+      }).as(tf.name)
     }
     // a row fails when any source value was non-null but its cast is null,
     // or a required field is null
@@ -56,16 +56,7 @@ object Validation {
         else Nil
       castFail ++ reqFail
     }
-    val bad = failures.reduceOption(_ || _).getOrElse(lit(false))
-
-    val extras =
-      if (keepExtra)
-        df.schema.fieldNames.filterNot(target.fieldNames.contains)
-          .map(n => col(s"`$n`")).toSeq
-      else Nil
-    val good = df.filter(!bad).select(casts.map { case (n, c) => c.as(n) } ++ extras: _*)
-    val quarantinedRows = df.filter(bad)
-    Validated(good, quarantinedRows)
+    (casts, failures.reduceOption(_ || _).getOrElse(lit(false)))
   }
 
   /** Quarantine record shape mirroring the reference's structured error

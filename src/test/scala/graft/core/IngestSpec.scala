@@ -272,19 +272,37 @@ class IngestSpec extends SparkSpec {
     assert(h3.table("t2").count() === 2)
   }
 
+  /** Distinct write-job ids in the parquet file names under `dir`: one
+    * per append (FileOutputCommitter names files part-NNNNN-<job uuid>). */
+  private def appendJobs(dir: String): Set[String] = {
+    val part = "part-\\d+-([0-9a-f-]{36}).*".r
+    new java.io.File(dir).listFiles().map(_.getName)
+      .collect { case part(job) => job }.toSet
+  }
+
   test("malformed payloads get a dead-letter copy in quarantine, not a silent drop") {
     val h = freshEngine()
+    h.ingest(env("""{"type_id":"t","data":{"id":"s","v":0}}"""), ingestTime = Some(t0))
     val r = h.ingest(env(
       """{"type_id":"t","data":{"id":"a","v":1}}""",
-      """{"type_id":"t","data":5}"""), ingestTime = Some(t0)) // scalar data -> corrupt JSON row
-    assert(r.perType("t") === 1L)
-    assert(r.quarantined === 1L)
-    val q = spark.read.parquet(h.registry.quarantinePath("t"))
-    assert(q.count() === 1L)
-    val row = q.collect().head
-    assert(row.getAs[String]("row_json").contains("5")) // raw payload preserved
-    assert(row.getAs[String]("message") === "malformed payload")
-    assert(row.getAs[String]("type_id") === "t")
+      """{"type_id":"t","data":5}""", // scalar data -> corrupt JSON row
+      """{"type_id":"t","data":{"id":"b","v":"bad"}}"""), // v is registered long
+      ingestTime = Some(t0))
+    assert(r === Ingest.Report(Map("t" -> 1L), deadLetters = 0L, quarantined = 2L))
+    // both bad classes land in ONE quarantine append
+    assert(appendJobs(h.registry.quarantinePath("t")).size === 1)
+    val q = spark.read.parquet(h.registry.quarantinePath("t")).collect()
+      .sortBy(_.getAs[Int]("errno"))
+    assert(q.map(_.getAs[Int]("errno")).toSeq === Seq(400, 999))
+    val Array(malformed, invalid) = q
+    assert(malformed.getAs[String]("row_json") === """{"raw_payload":"5"}""") // raw payload preserved
+    assert(malformed.getAs[String]("message") === "malformed payload")
+    assert(invalid.getAs[String]("row_json") === """{"id":"b","v":"bad"}""")
+    assert(invalid.getAs[String]("message") === "validation failed")
+    assert(q.forall(_.getAs[String]("error") === "Invalid parameters"))
+    assert(q.forall(_.getAs[String]("type_id") === "t"))
+    assert(h.table("t").orderBy("id").collect().map(_.getAs[String]("id")).toSeq ===
+      Seq("a", "s"))
   }
 
   test("registry runs on the Hadoop FileSystem API (explicit file: scheme)") {
@@ -346,10 +364,21 @@ class IngestSpec extends SparkSpec {
     // L0 path — this is the only coverage of the bulk clustered write
     val h = freshEngine()
     val n = Ingest.SmallAppendRows + 1
+    // a few invalid (last_modified registers as a timestamp) and malformed
+    // rows ride along: the class counts are observed after the bucket
+    // exchange
+    val invalid = (1 to 3).map(i =>
+      s"""{"type_id":"t","data":{"id":"bad$i","v":$i,"last_modified":"never"}}""")
+    val malformed = Seq("""{"type_id":"t","data":5}""", """{"type_id":"t","data":"x"}""")
     val envelopes = spark.range(n).select(concat(
       lit("""{"type_id":"t","data":{"id":"k"""), col("id"),
       lit("""","v":"""), col("id"), lit("}}")).as("message"))
-    h.ingest(envelopes, ingestTime = Some(t0))
+      .union(env(invalid ++ malformed: _*))
+    val r = h.ingest(envelopes, ingestTime = Some(t0))
+    assert(r.perType === Map("t" -> n) && r.quarantined === 5L)
+    val q = spark.read.parquet(h.registry.quarantinePath("t"))
+      .groupBy("errno").count().collect().map(row => row.getInt(0) -> row.getLong(1)).toMap
+    assert(q === Map(400 -> 2L, 999 -> 3L))
     val dirs = new java.io.File(h.registry.tablePath("t"))
       .listFiles().filter(_.isDirectory).map(_.getName).sorted
     assert(!dirs.contains(s"_part=${Ingest.L0Bucket}"), "bulk append must not land in L0")
@@ -595,25 +624,28 @@ class IngestSpec extends SparkSpec {
   test("a warm ingest of a known-shape type runs the fan-out aggregation and " +
       "the append, and no count job") {
     val h = freshEngine()
-    def batch(from: Int) = env((from until from + 20).map(i =>
-      s"""{"type_id":"jc","data":{"id":"k$i","v":$i,"s":"x$i"}}"""): _*)
+    def rows(from: Int) = (from until from + 20).map(i =>
+      s"""{"type_id":"jc","data":{"id":"k$i","v":$i,"s":"x$i"}}""")
     // cold batch: creates the table and remembers the batch's shape
-    h.ingest(batch(0), ingestTime = Some(t0))
+    h.ingest(env(rows(0): _*), ingestTime = Some(t0))
     val bridge = org.apache.spark.sql.graftbridge.Bridge
     bridge.waitListenerBusEmpty(spark.sparkContext, 10000L)
-    // stage names of every job the warm batch starts
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(e.stageInfos.map(_.name).mkString(" + "))
+    // the report and the stage names of every job one ingest starts
+    def traced(batch: org.apache.spark.sql.DataFrame, at: java.sql.Timestamp) = {
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.add(e.stageInfos.map(_.name).mkString(" + "))
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val r = h.ingest(batch, ingestTime = Some(at))
+        bridge.waitListenerBusEmpty(spark.sparkContext, 10000L)
+        (r, jobs)
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
     val hits = Ingest.schemaCacheHits.get()
-    spark.sparkContext.addSparkListener(listener)
-    val r = try {
-      val r = h.ingest(batch(20), ingestTime = Some(t1))
-      bridge.waitListenerBusEmpty(spark.sparkContext, 10000L)
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (r, jobs) = traced(env(rows(20): _*), t1)
     assert(Ingest.schemaCacheHits.get() === hits + 1, "the warm batch skips inference")
     assert(r.perType === Map("jc" -> 20L) && r.quarantined === 0L)
     // the fan-out aggregation is three jobs under AQE (the cached
@@ -621,5 +653,14 @@ class IngestSpec extends SparkSpec {
     // collect); the append is one. A recount would be a fifth.
     assert(jobs.size === 4, jobs.toString)
     assert(h.table("jc").count() === 40L)
+    // a dirty warm batch (one invalid, one malformed row; a new shape set,
+    // so inference runs) adds the inference scan and ONE quarantine write:
+    // the append's observation counts all three classes
+    val (dirty, dirtyJobs) = traced(env(rows(40) ++ Seq(
+      """{"type_id":"jc","data":{"id":"bad","v":"x","s":"y"}}""",
+      """{"type_id":"jc","data":5}"""): _*), t1)
+    assert(dirty.perType === Map("jc" -> 20L) && dirty.quarantined === 2L)
+    assert(dirtyJobs.size === 6, dirtyJobs.toString)
+    assert(h.table("jc").count() === 60L)
   }
 }
