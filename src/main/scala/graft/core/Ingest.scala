@@ -128,27 +128,32 @@ object Ingest {
       // concurrently; Spark's scheduler interleaves the jobs. A denied type
       // is one quarantine write, an admitted one a full sub-batch ingest
       // (VERDICT r19 #5: a mass-deny batch must not pay one SEQUENTIAL
-      // driver-blocked job per denied type).
+      // driver-blocked job per denied type). The denied writes finish
+      // before any admitted type starts: a failed 403 write fails the batch
+      // before anything is appended, since a retried batch would re-append
+      // rows with generated ids, which LWW cannot merge.
       import scala.concurrent.{ExecutionContext, Future}
       implicit val ec: ExecutionContext = Ingest.ingestPool
-      val futures = types.toSeq.map { typeId =>
+      def payloads(typeId: String) =
+        cached.filter($"type_id" === typeId).select("data_json")
+      val (deniedTypes, admitted) = types.toSeq.partition(denied.contains)
+      val denials = Future.traverse(deniedTypes) { typeId =>
         Future {
-          val payloads = cached.filter($"type_id" === typeId).select("data_json")
-          denied.get(typeId) match {
-            case Some(code) =>
-              writeQuarantine(registry, typeId, Validation.quarantineRecords(
-                payloads, errno = 403, error = code,
-                message = s"user '${writer.get}' may not ${
-                  if (code == "CreateForbidden") "create" else "write"} type '$typeId'"))
-              None
-            case None =>
-              Some(typeId -> ingestType(spark, registry, typeId,
-                payloads.as[String], ingestTime,
-                subTotal = subTotals(typeId), shapeSig = shapeSigs(typeId)))
-          }
+          val code = denied(typeId)
+          writeQuarantine(registry, typeId, Validation.quarantineRecords(
+            payloads(typeId), errno = 403, error = code,
+            message = s"user '${writer.get}' may not ${
+              if (code == "CreateForbidden") "create" else "write"} type '$typeId'"))
         }
       }
-      val results = Await.result(Future.sequence(futures), Duration.Inf).flatten
+      val ingests = denials.flatMap(_ => Future.traverse(admitted) { typeId =>
+        Future {
+          typeId -> ingestType(spark, registry, typeId,
+            payloads(typeId).as[String], ingestTime,
+            subTotal = subTotals(typeId), shapeSig = shapeSigs(typeId))
+        }
+      })
+      val results = Await.result(ingests, Duration.Inf)
       Report(
         results.map { case (t, (n, _)) => t -> n }.toMap,
         deadLetters,
@@ -303,7 +308,6 @@ object Ingest {
   private val Good = 0
   private val Invalid = 1
   private val Malformed = 2
-  private val ClassCol = "_ingest_class"
 
   /** One type's sub-batch: returns (written, quarantined).
     *
@@ -382,11 +386,15 @@ object Ingest {
     //    are quarantined, not widened (tests/test_models.py:65-83).
     val (casts, bad) = Validation.validate(flat.schema, target)
     val validity = when(bad, Invalid).otherwise(Good)
-    val classified = flat.withColumn(ClassCol,
+    val rowClass =
       if (flat.columns.contains(corruptCol))
         when(col(corruptCol).isNotNull, Malformed).otherwise(validity)
-      else validity)
-    def isClass(c: Int) = col(ClassCol) === c
+      else validity
+    // payload keys are not reserved, so the class column takes a name no
+    // parsed or registered column uses (Spark resolves names case-blind)
+    val taken = (flat.columns ++ target.fieldNames).map(_.toLowerCase).toSet
+    val classCol = Iterator.iterate("_ingest_class")(_ + "_").find(c => !taken(c)).get
+    def isClass(c: Int) = col(classCol) === c
     // count(when(...)), not count_if: count_if's rewrite adds a projection
     // that splits the append into one more codegen stage
     val classCounts = Seq(Good -> "written", Invalid -> "invalid",
@@ -396,7 +404,7 @@ object Ingest {
     //    supported via conf) and last_modified=now (models.py:53-56).
     val lm: org.apache.spark.sql.Column =
       ingestTime.map(t => lit(t)).getOrElse(current_timestamp())
-    val withDefaults = classified.select(casts :+ col(ClassCol): _*)
+    val withDefaults = flat.select(casts :+ rowClass.as(classCol): _*)
       .withColumn("id", coalesce(col("id").cast(StringType),
         regexp_replace(expr("uuid()"), "-", "")))
       .withColumn("last_modified", coalesce(col("last_modified"), lm))
@@ -456,7 +464,7 @@ object Ingest {
       (if (smallAppend) written.coalesce(1)
        else written.repartition(NumIdBuckets, col("_part")))
         .observe(obs, classCounts.head, classCounts.tail: _*)
-        .filter(isClass(Good)).drop(ClassCol)
+        .filter(isClass(Good)).drop(classCol)
         .write.mode("append").partitionBy("_part")
         .options(writeOptions(registry))
         .parquet(tablePath)
@@ -466,7 +474,8 @@ object Ingest {
       val counts = try Await.result(obs.future, ObservationWait)
       catch {
         case _: TimeoutException =>
-          classified.agg(classCounts.head, classCounts.tail: _*).head()
+          flat.select(rowClass.as(classCol))
+            .agg(classCounts.head, classCounts.tail: _*).head()
       }
       if (counts.getLong(0) == 0 && !existedBefore) registry.fs.delete(tpath, true)
       counts
@@ -479,10 +488,10 @@ object Ingest {
     // invalid rows their flattened, uncoerced values
     val quarantined =
       (if (nMalformed > 0) Seq(Validation.quarantineRecords(
-        classified.filter(isClass(Malformed)).select(col(corruptCol).as("raw_payload")),
+        flat.filter(rowClass === Malformed).select(col(corruptCol).as("raw_payload")),
         errno = 400, message = "malformed payload")) else Nil) ++
       (if (nInvalid > 0) Seq(Validation.quarantineRecords(
-        classified.filter(isClass(Invalid)).drop(ClassCol, corruptCol))) else Nil)
+        flat.filter(rowClass === Invalid).drop(corruptCol))) else Nil)
     if (quarantined.nonEmpty) writeQuarantine(registry, typeId, quarantined.reduce(_ union _))
     (n, nInvalid + nMalformed)
   }

@@ -100,6 +100,14 @@ class IngestSpec extends SparkSpec {
       assert(qs.forall(_.getAs[String]("error") === "CreateForbidden"))
       assert(!h.registry.knownTypes.contains(t))
     }
+    // a failed 403 write fails the batch before any admitted type appends:
+    // a file where d4's quarantine directory goes makes its write fail
+    h.registry.fs.create(new org.apache.hadoop.fs.Path(
+      h.registry.quarantinePath("d4"))).close()
+    intercept[Exception](h.ingestAs("u", perms, env(
+      """{"type_id":"d4","data":{"id":"x"}}""",
+      """{"type_id":"t_ok","data":{"id":"ok2"}}"""), ingestTime = Some(t1)))
+    assert(h.table("t_ok").collect().map(_.getAs[String]("id")).toSeq === Seq("ok"))
   }
 
   test("add-a-field evolves schema add-only; old rows read as null") {
@@ -282,9 +290,12 @@ class IngestSpec extends SparkSpec {
 
   test("malformed payloads get a dead-letter copy in quarantine, not a silent drop") {
     val h = freshEngine()
-    h.ingest(env("""{"type_id":"t","data":{"id":"s","v":0}}"""), ingestTime = Some(t0))
+    // `_ingest_class` is an ordinary payload key: stored as data, on the
+    // first batch and on every later one
+    h.ingest(env("""{"type_id":"t","data":{"id":"s","v":0,"_ingest_class":"x"}}"""),
+      ingestTime = Some(t0))
     val r = h.ingest(env(
-      """{"type_id":"t","data":{"id":"a","v":1}}""",
+      """{"type_id":"t","data":{"id":"a","v":1,"_ingest_class":"y"}}""",
       """{"type_id":"t","data":5}""", // scalar data -> corrupt JSON row
       """{"type_id":"t","data":{"id":"b","v":"bad"}}"""), // v is registered long
       ingestTime = Some(t0))
@@ -301,8 +312,9 @@ class IngestSpec extends SparkSpec {
     assert(invalid.getAs[String]("message") === "validation failed")
     assert(q.forall(_.getAs[String]("error") === "Invalid parameters"))
     assert(q.forall(_.getAs[String]("type_id") === "t"))
-    assert(h.table("t").orderBy("id").collect().map(_.getAs[String]("id")).toSeq ===
-      Seq("a", "s"))
+    assert(h.table("t").orderBy("id").collect()
+      .map(r => r.getAs[String]("id") -> r.getAs[String]("_ingest_class")).toSeq ===
+      Seq("a" -> "y", "s" -> "x"))
   }
 
   test("registry runs on the Hadoop FileSystem API (explicit file: scheme)") {
