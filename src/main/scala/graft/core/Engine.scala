@@ -86,7 +86,7 @@ object Engine {
       * ingest tie-break columns, so point lookups still prune and later
       * appends still LWW-merge correctly against compacted rows. */
     def compact(typeId: String): Unit = registry.withTableLock(typeId) {
-      rewriteLog(typeId, lww(tableLog(typeId)))
+      rewriteLog(typeId)(h => h.lww(h.tableLog(typeId)))
     }
 
     /** RETENTION-BOUNDED compaction — Delta/Iceberg VACUUM semantics over
@@ -104,17 +104,19 @@ object Engine {
       * history, fold everything older. */
     def vacuum(typeId: String, horizonEpoch: Long): Unit =
       registry.withTableLock(typeId) {
-        val log = epochLog(typeId)
-        val collapsed = lww(log.filter(col("_ingest_epoch") <= horizonEpoch))
-        // age out tombstones past the horizon (gc_grace: the horizon must
-        // trail the max accepted write lateness — see Ingest.DeletedCol);
-        // [[compact]] retains them, only vacuum's explicit boundary drops
-        val prefix =
-          if (collapsed.columns.contains(Ingest.DeletedCol))
-            collapsed.filter(!coalesce(col(Ingest.DeletedCol), lit(false)))
-          else collapsed
-        val suffix = log.filter(col("_ingest_epoch") > horizonEpoch)
-        rewriteLog(typeId, prefix.unionByName(suffix))
+        rewriteLog(typeId) { h =>
+          val log = h.epochLog(typeId)
+          val collapsed = h.lww(log.filter(col("_ingest_epoch") <= horizonEpoch))
+          // age out tombstones past the horizon (gc_grace: the horizon must
+          // trail the max accepted write lateness — see Ingest.DeletedCol);
+          // [[compact]] retains them, only vacuum's explicit boundary drops
+          val prefix =
+            if (collapsed.columns.contains(Ingest.DeletedCol))
+              collapsed.filter(!coalesce(col(Ingest.DeletedCol), lit(false)))
+            else collapsed
+          val suffix = log.filter(col("_ingest_epoch") > horizonEpoch)
+          prefix.unionByName(suffix)
+        }
       }
 
     /** Shared rewrite-and-swap tail of [[compact]]/[[vacuum]]. The source
@@ -133,14 +135,22 @@ object Engine {
       * paying no clustering exchange and 1 commit for the same ≤16 bucket
       * files; past the threshold the rewrite keeps the parallel bucket
       * shuffle a 100 TB table needs. Listing bytes is the same metadata
-      * pass compactIfNeeded already does. */
-    private def rewriteLog(typeId: String, rows: DataFrame): Unit = {
+      * pass compactIfNeeded already does.
+      *
+      * `build` makes the rewrite on the Handle it is given: under
+      * [[InterpretedRewriteBytes]] that is this Handle over
+      * [[Engine.interpreted]]'s child session, so a micro-scale rewrite
+      * compiles no generated code. */
+    private def rewriteLog(typeId: String)(build: Handle => DataFrame): Unit = {
+      val bytes = registry.dataBytes(typeId)
+      val rows = build(
+        if (bytes < InterpretedRewriteBytes) copy(spark = Engine.interpreted(spark)) else this)
       val hasPart = rows.columns.contains("_part")
       val folded =
         if (hasPart && rows.columns.contains("id"))
           rows.withColumn("_part", Ingest.idBucket(col("id")))
         else rows
-      val smallTable = registry.dataBytes(typeId) < 128L * 1024 * 1024
+      val smallTable = bytes < 128L * 1024 * 1024
       val out =
         if (!hasPart) folded
         else if (smallTable) folded.coalesce(1).sortWithinPartitions("_part")
@@ -315,6 +325,46 @@ object Engine {
       "server" -> !spark.sparkContext.isStopped,
       "schema" -> registry.knownTypes.contains("descriptor_model"))
   }
+
+  /** Tables under this many data bytes compact and vacuum on
+    * [[interpreted]]'s session. A rewrite's generated code depends on the
+    * type's schema, so a maintenance compaction mostly compiles anew
+    * (21 classes for a 4-column type), while the interpreted rewrite pays
+    * per row. Crossover, one type of 4 payload columns, local[4] on a
+    * 4-core VM, 3 runs each, a cold codegen cache against interpreted:
+    * 0.09 MB 0.51–0.68 s vs 0.27–0.35 s; 3.3 MB 1.23–1.30 s vs
+    * 0.92–1.25 s; 7.6 MB (codegen partly cached) 1.43–1.85 s vs
+    * 1.90–2.35 s; 15 MB 2.6–3.3 s vs 3.6–4.2 s. */
+  private val InterpretedRewriteBytes = 4L * 1024 * 1024
+
+  private val interpretedSessions =
+    scala.collection.concurrent.TrieMap.empty[SparkSession, SparkSession]
+
+  /** Cached child of `s` that runs without generated code:
+    * `spark.sql.codegen.wholeStage=false` and
+    * `spark.sql.codegen.factoryMode=NO_CODEGEN`. `factoryMode` is marked
+    * internal in Spark; it is the switch that sends the projection,
+    * predicate and ordering factories to their interpreted forms. With
+    * whole-stage codegen off alone, those factories still compiled 66 and
+    * 106 classes in the two compaction batches of an `ingest_stream` round,
+    * and maintenance got no faster. The child copies the parent's runtime
+    * SQL conf when it is made. One warmed child per parent session, as
+    * `streaming.Declared`'s sized sessions: the first query on a new
+    * session pays its lazy SessionState init, and a Handle is often
+    * bootstrapped per run. */
+  private def interpreted(s: SparkSession): SparkSession =
+    interpretedSessions.getOrElseUpdate(s, {
+      val c = s.newSession()
+      // a new session already has the shared SparkConf; copy what the
+      // parent set at runtime
+      s.conf.getAll.foreach { case (k, v) =>
+        if (!c.conf.getOption(k).contains(v)) c.conf.set(k, v)
+      }
+      c.conf.set("spark.sql.codegen.wholeStage", "false")
+      c.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      c.sql("SELECT 1").collect()
+      c
+    })
 
   /** Bootstrap the engine over a warehouse directory (keyspace analog).
     * `overrideWarehouse` mirrors the reference's override_keyspaces drop

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.concurrent.{Await, TimeoutException}
 import scala.concurrent.duration._
+import graft.plans.BatchStamps
 import graft.sources.Codecs
 
 /** The batch ingestion pipeline — the reference's main path re-expressed for
@@ -249,7 +250,9 @@ object Ingest {
     * `_deleted = true`, and the batch epoch/seq stamps every ingest write
     * carries. Size-aware like [[ingestType]]'s append: metadata-scale
     * deletes land as ONE L0 file (no exchange), bulk deletes shuffle into
-    * the bucketed layout. Returns the tombstone count. */
+    * the bucketed layout. The delete time and epoch are [[BatchStamps]], so
+    * a repeated delete on a type reuses its compiled classes. Returns the
+    * tombstone count. */
   def appendTombstones(spark: SparkSession, registry: SchemaRegistry,
                        typeId: String, doomed: DataFrame,
                        deleteTime: java.sql.Timestamp): Long = {
@@ -257,9 +260,9 @@ object Ingest {
     require(registry.fs.exists(new org.apache.hadoop.fs.Path(tablePath)),
       s"delete from '$typeId': table does not exist")
     val rows = doomed.select(col("id").cast(StringType).as("id")).distinct()
-      .withColumn("last_modified", lit(deleteTime))
+      .withColumn("last_modified", BatchStamps.timestamp(deleteTime))
       .withColumn(DeletedCol, lit(true))
-      .withColumn("_ingest_epoch", lit(batchEpochMicros()))
+      .withColumn("_ingest_epoch", BatchStamps.long(batchEpochMicros()))
       .withColumn("_ingest_seq", monotonically_increasing_id())
       .cache()
     try {
@@ -400,13 +403,13 @@ object Ingest {
     val classCounts = Seq(Good -> "written", Invalid -> "invalid",
       Malformed -> "malformed").map { case (c, name) => count(when(isClass(c), 1)).as(name) }
 
-    // 5. Defaults: id (uuid1-hex analog; deterministic content hash also
-    //    supported via conf) and last_modified=now (models.py:53-56).
-    val lm: org.apache.spark.sql.Column =
-      ingestTime.map(t => lit(t)).getOrElse(current_timestamp())
+    // 5. Defaults: id (uuid1-hex analog: a random UUID as 32 hex chars)
+    //    and last_modified = now (models.py:53-56). Both, and the epoch
+    //    below, are batch stamps: read by reference, so a warm batch reuses
+    //    the type's compiled append.
+    val lm = ingestTime.map(BatchStamps.timestamp).getOrElse(BatchStamps.now())
     val withDefaults = flat.select(casts :+ rowClass.as(classCol): _*)
-      .withColumn("id", coalesce(col("id").cast(StringType),
-        regexp_replace(expr("uuid()"), "-", "")))
+      .withColumn("id", coalesce(col("id").cast(StringType), BatchStamps.uuidHex()))
       .withColumn("last_modified", coalesce(col("last_modified"), lm))
       // deterministic LWW tie-break for equal last_modified: `_ingest_epoch`
       // orders BATCHES (driver-side µs wall clock, one value per sub-batch),
@@ -417,7 +420,7 @@ object Ingest {
       // (consumer.py:79-83). Per-ROW expressions, not a plan-time constant;
       // numbered before the good-row filter, so quarantined rows leave gaps
       // that do not change the order.
-      .withColumn("_ingest_epoch", lit(batchEpochMicros()))
+      .withColumn("_ingest_epoch", BatchStamps.long(batchEpochMicros()))
       .withColumn("_ingest_seq", monotonically_increasing_id())
 
     // 6. Append to the per-type table, partitioned by the id-hash bucket

@@ -21,9 +21,11 @@ import graft.sources.Codecs
   * may evolve between batches; both are driver-side decisions Structured
   * Streaming cannot express in a single fixed-schema sink (SURVEY §2.B).
   *
-  * Delivery: per-batch appends + LWW read view ⇒ re-processed batches
-  * (at-least-once replay after failure) converge to the same serving state —
-  * the same idempotence Cassandra upserts gave the reference.
+  * Delivery is at-least-once: a replayed batch appends its rows again.
+  * Rows with an explicit `id` converge under the LWW read view, as
+  * Cassandra upserts did for the reference. Rows whose `id` is generated
+  * do not: a replay appends them again under fresh ids, and their
+  * quarantine rows twice (ROADMAP item 1).
   */
 object StreamingIngest {
 
@@ -113,8 +115,10 @@ object StreamingIngest {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // per-batch failure isolation (reference consumer.py:78-83): a
-        // poison batch logs and is skipped; good rows in it were already
-        // split out by the pipeline's quarantine routing
+        // failing batch is logged and skipped, and its offsets still
+        // commit, so it is never replayed: types that appended before the
+        // failure keep their rows, and the failing type's rows are neither
+        // written nor quarantined (ROADMAP item 1)
         try {
           writer match {
             case Some(u) => h.ingestAs(u, grants.get, batch)

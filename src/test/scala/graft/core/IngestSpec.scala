@@ -2,6 +2,7 @@ package graft.core
 
 import graft.SparkSpec
 import graft.sources.Codecs
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -33,6 +34,15 @@ class IngestSpec extends SparkSpec {
     val row = df.collect().head
     assert(row.getAs[String]("id") != null) // auto uuid
     assert(row.getAs[java.sql.Timestamp]("last_modified") === t0)
+    // generated ids are 32 lowercase hex chars, distinct across the
+    // partitions of a batch and across batches
+    def idless(from: Int) = spark.range(from, from + 200, 1, 4).select(concat(
+      lit("""{"type_id":"u","data":{"n":"""), col("id").cast("string"), lit("}}")).as("message"))
+    h.ingest(idless(0))
+    h.ingest(idless(200))
+    val ids = h.table("u").select("id").as[String].collect()
+    assert(ids.length === 400 && ids.distinct.length === 400)
+    assert(ids.forall(_.matches("[0-9a-f]{32}")), ids.take(3).mkString(","))
   }
 
   test("write-gated ingest: denied types quarantine with the 403 error; " +
@@ -409,8 +419,19 @@ class IngestSpec extends SparkSpec {
     val before = h.table("t").orderBy("id").collect().map(r =>
       (r.getAs[String]("id"), r.getAs[Long]("v"))).toSeq
 
+    // a micro-scale table compacts on the interpreted session
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     h.compact("t")
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles,
+      "a small-table compaction compiles no classes")
     assert(h.tableLog("t").count() === 2L) // log collapsed to live rows
+    // one file per non-empty id bucket, and the L0 zone folded away
+    val buckets = Seq("a", "b").toDF("id").select(Ingest.idBucket(col("id")))
+      .as[Long].collect().toSet
+    val parts = new java.io.File(h.registry.tablePath("t")).listFiles()
+      .filter(_.isDirectory).map(d => d.getName -> d.listFiles()
+        .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))).toMap
+    assert(parts === buckets.map(b => s"_part=$b" -> 1).toMap)
     val after = h.table("t").orderBy("id").collect().map(r =>
       (r.getAs[String]("id"), r.getAs[Long]("v"))).toSeq
     assert(after === before)
@@ -657,8 +678,13 @@ class IngestSpec extends SparkSpec {
       } finally spark.sparkContext.removeSparkListener(listener)
     }
     val hits = Ingest.schemaCacheHits.get()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val (r, jobs) = traced(env(rows(20): _*), t1)
     assert(Ingest.schemaCacheHits.get() === hits + 1, "the warm batch skips inference")
+    // its stamps (a new ingestTime and epoch, a new uuid seed) are read
+    // by reference, so it reuses the cold batch's generated classes
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles,
+      "the warm batch compiles no classes")
     assert(r.perType === Map("jc" -> 20L) && r.quarantined === 0L)
     // the fan-out aggregation is three jobs under AQE (the cached
     // envelopes' table-cache stage, its shuffle map stage, then the

@@ -1,6 +1,7 @@
 package graft.core
 
 import graft.SparkSpec
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 
 /** Time-travel (as-of) reads and version history over the engine's LWW
@@ -132,6 +133,14 @@ class TimeTravelSpec extends SparkSpec {
     val e1 = h.currentEpoch("tt")
     h.delete("tt", Seq("a"),
       java.sql.Timestamp.from(java.time.Instant.parse("2024-01-05T00:00:00Z")))
+    // the delete time and epoch are read by reference: a repeated delete on
+    // the type (here of an id never written, which serves nothing either
+    // way) reuses the first one's generated classes
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    h.delete("tt", Seq("never-written"),
+      java.sql.Timestamp.from(java.time.Instant.parse("2024-01-06T00:00:00Z")))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles,
+      "a repeated delete compiles no classes")
     val e2 = h.currentEpoch("tt")
     assert(served(h.table("tt")) === Set("b" -> 2),
       "a deleted id must vanish from the serving view")
