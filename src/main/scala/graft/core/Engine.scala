@@ -327,44 +327,62 @@ object Engine {
   }
 
   /** Tables under this many data bytes compact and vacuum on
-    * [[interpreted]]'s session. A rewrite's generated code depends on the
-    * type's schema, so a maintenance compaction mostly compiles anew
-    * (21 classes for a 4-column type), while the interpreted rewrite pays
-    * per row. Crossover, one type of 4 payload columns, local[4] on a
-    * 4-core VM, 3 runs each, a cold codegen cache against interpreted:
-    * 0.09 MB 0.51–0.68 s vs 0.27–0.35 s; 3.3 MB 1.23–1.30 s vs
-    * 0.92–1.25 s; 7.6 MB (codegen partly cached) 1.43–1.85 s vs
-    * 1.90–2.35 s; 15 MB 2.6–3.3 s vs 3.6–4.2 s. */
-  private val InterpretedRewriteBytes = 4L * 1024 * 1024
+    * [[interpreted]]'s session; larger ones on the Handle's own
+    * code-generating session. The interpreted rewrite compiles nothing but
+    * pays per row. The bound is the crossover against a cold code cache,
+    * one type of 4 payload columns, local[4] on a 4-core VM, 3 runs each,
+    * cold codegen vs interpreted: 0.09 MB 0.51–0.68 s vs 0.27–0.35 s;
+    * 3.3 MB 1.23–1.30 s vs 0.92–1.25 s; 7.6 MB (codegen partly cached)
+    * 1.43–1.85 s vs 1.90–2.35 s; 15 MB 2.6–3.3 s vs 3.6–4.2 s. Against a
+    * warm cache codegen is already faster at 3.3 MB (0.75–0.91 s). A
+    * type's first rewrite in a session always meets a cold cache; later
+    * ones did too while each batch's inlined stamps filled Spark's
+    * 100-entry cache (27 compiles per compaction batch of a 6-type stream;
+    * 0 with `spark.sql.codegen.cache.maxEntries=1000`). With [[graft.plans.BatchStamps]] the same
+    * stream keeps its rewrite classes cached after the first round, and at
+    * that micro scale the interpreted rewrite is still faster: 628–835 ms
+    * against 774–1107 ms of maintenance per compaction batch. No benchmark
+    * workload compacts a table above the bound, so the code-generating
+    * side and the bound itself are measured only by these probes (ROADMAP
+    * item 3). */
+  private[core] val InterpretedRewriteBytes = 4L * 1024 * 1024
+
+  /** What [[interpreted]] sets over the parent's conf. `factoryMode` is
+    * marked internal in Spark; it is the switch that sends the projection,
+    * predicate and ordering factories to their interpreted forms. With
+    * whole-stage codegen off alone, those factories still compiled 66 and
+    * 106 classes in the two compaction batches of an `ingest_stream` round,
+    * and maintenance got no faster. */
+  private val NoCodegen = Map(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
   private val interpretedSessions =
     scala.collection.concurrent.TrieMap.empty[SparkSession, SparkSession]
 
-  /** Cached child of `s` that runs without generated code:
-    * `spark.sql.codegen.wholeStage=false` and
-    * `spark.sql.codegen.factoryMode=NO_CODEGEN`. `factoryMode` is marked
-    * internal in Spark; it is the switch that sends the projection,
-    * predicate and ordering factories to their interpreted forms. With
-    * whole-stage codegen off alone, those factories still compiled 66 and
-    * 106 classes in the two compaction batches of an `ingest_stream` round,
-    * and maintenance got no faster. The child copies the parent's runtime
-    * SQL conf when it is made. One warmed child per parent session, as
-    * `streaming.Declared`'s sized sessions: the first query on a new
-    * session pays its lazy SessionState init, and a Handle is often
-    * bootstrapped per run. */
-  private def interpreted(s: SparkSession): SparkSession =
-    interpretedSessions.getOrElseUpdate(s, {
-      val c = s.newSession()
-      // a new session already has the shared SparkConf; copy what the
-      // parent set at runtime
-      s.conf.getAll.foreach { case (k, v) =>
-        if (!c.conf.getOption(k).contains(v)) c.conf.set(k, v)
-      }
-      c.conf.set("spark.sql.codegen.wholeStage", "false")
-      c.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+  /** Cached child of `s` that runs without generated code ([[NoCodegen]]).
+    * One warmed child per parent session, as `streaming.Declared`'s sized
+    * sessions: the first query on a new session pays its lazy SessionState
+    * init, and a Handle is often bootstrapped per run. Each call first
+    * brings the child's runtime SQL conf up to the parent's current one,
+    * so a rewrite follows the Handle's settings at the time it runs,
+    * whichever session it runs on. */
+  private def interpreted(s: SparkSession): SparkSession = {
+    // a new session already has the shared SparkConf, so only what the
+    // parent set or unset at runtime differs
+    def follow(c: SparkSession): SparkSession = {
+      val want = s.conf.getAll ++ NoCodegen
+      val have = c.conf.getAll
+      (have.keySet -- want.keySet).foreach(c.conf.unset)
+      want.foreach { case (k, v) => if (!have.get(k).contains(v)) c.conf.set(k, v) }
+      c
+    }
+    follow(interpretedSessions.getOrElseUpdate(s, {
+      val c = follow(s.newSession())
       c.sql("SELECT 1").collect()
       c
-    })
+    }))
+  }
 
   /** Bootstrap the engine over a warehouse directory (keyspace analog).
     * `overrideWarehouse` mirrors the reference's override_keyspaces drop

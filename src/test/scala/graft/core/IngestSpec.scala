@@ -426,12 +426,7 @@ class IngestSpec extends SparkSpec {
       "a small-table compaction compiles no classes")
     assert(h.tableLog("t").count() === 2L) // log collapsed to live rows
     // one file per non-empty id bucket, and the L0 zone folded away
-    val buckets = Seq("a", "b").toDF("id").select(Ingest.idBucket(col("id")))
-      .as[Long].collect().toSet
-    val parts = new java.io.File(h.registry.tablePath("t")).listFiles()
-      .filter(_.isDirectory).map(d => d.getName -> d.listFiles()
-        .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))).toMap
-    assert(parts === buckets.map(b => s"_part=$b" -> 1).toMap)
+    assert(bucketFiles(h, "t") === oneFilePerBucket(Seq("a", "b")))
     val after = h.table("t").orderBy("id").collect().map(r =>
       (r.getAs[String]("id"), r.getAs[Long]("v"))).toSeq
     assert(after === before)
@@ -443,6 +438,60 @@ class IngestSpec extends SparkSpec {
     h.ingest(env("""{"type_id":"t","data":{"id":"a","v":9}}"""),
       ingestTime = Some(java.sql.Timestamp.valueOf("2024-01-03 00:00:00")))
     assert(h.get("t", "a").collect().head.getAs[Long]("v") === 9L)
+    // a rewrite follows the session's settings when it runs, also on the
+    // interpreted session an earlier compaction made: a codec set (then
+    // unset) afterwards names the rewritten files
+    val codec = "spark.sql.parquet.compression.codec"
+    def names = partFiles(h, "t").map(_._2)
+    val prev = spark.conf.getOption(codec)
+    spark.conf.set(codec, "gzip")
+    try h.compact("t") finally prev.fold(spark.conf.unset(codec))(spark.conf.set(codec, _))
+    assert(names.nonEmpty && names.forall(_.endsWith(".gz.parquet")), names.mkString(","))
+    h.compact("t")
+    assert(names.nonEmpty && !names.exists(_.endsWith(".gz.parquet")), names.mkString(","))
+  }
+
+  /** (partition dir, file name) of each parquet part file of a type's table. */
+  private def partFiles(h: Engine.Handle, typeId: String): Seq[(String, String)] =
+    new java.io.File(h.registry.tablePath(typeId)).listFiles().toSeq
+      .filter(_.isDirectory).flatMap(d => d.listFiles().map(d.getName -> _.getName))
+      .filter { case (_, f) => f.startsWith("part-") && f.endsWith(".parquet") }
+
+  /** Parquet part files per partition directory of a type's table. */
+  private def bucketFiles(h: Engine.Handle, typeId: String): Map[String, Int] = {
+    val files = partFiles(h, typeId)
+    new java.io.File(h.registry.tablePath(typeId)).listFiles()
+      .filter(_.isDirectory).map(d => d.getName -> files.count(_._1 == d.getName)).toMap
+  }
+
+  /** The layout a compaction leaves for `ids`: one file per id bucket. */
+  private def oneFilePerBucket(ids: Seq[String]): Map[String, Int] =
+    ids.toDF("id").select(Ingest.idBucket(col("id"))).as[Long].collect()
+      .toSet.map((b: Long) => s"_part=$b" -> 1).toMap
+
+  test("compact of a table past the interpreted bound runs generated code " +
+      "and leaves the same layout and LWW winners") {
+    val h = freshEngine()
+    // 40k ids with a 64-hex-char pad each; the second batch rewrites the
+    // upper half later
+    val n = 40000
+    def batch(from: Int, v: Int) = spark.range(from, n, 1, 4).select(concat(
+      lit("""{"type_id":"big","data":{"id":"k"""), col("id").cast("string"),
+      lit(s"""","big_v":$v,"big_pad":""""), sha2(col("id").cast("string"), 256),
+      lit("\"}}")).as("message"))
+    h.ingest(batch(0, 1), ingestTime = Some(t0))
+    h.ingest(batch(n / 2, 2), ingestTime = Some(t1))
+    assert(h.registry.dataBytes("big") >= Engine.InterpretedRewriteBytes)
+
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    h.compact("big")
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount > compiles,
+      "a table past the bound compacts on the code-generating session")
+    assert(h.tableLog("big").count() === n.toLong) // log collapsed to live rows
+    assert(bucketFiles(h, "big") === oneFilePerBucket((0 until n).map(i => s"k$i")))
+    val winners = h.table("big").groupBy("big_v").count().as[(Long, Long)].collect().toMap
+    assert(winners === Map(1L -> n / 2, 2L -> n / 2))
+    assert(h.get("big", s"k${n - 1}").select("big_v").as[Long].collect() === Array(2L))
   }
 
   test("compactIfNeeded triggers on file count only (metadata policy)") {
