@@ -115,18 +115,6 @@ object Bench {
     * record self-repairs localized sustained contention too. Absent file
     * → empty map (first round, or a fresh clone) — the self-ratio checks
     * still run. */
-  /** SPARK_GRAFT_AQE A/B knob, normalized (1/0/on/off/yes/no accepted) —
-    * shared by every session builder that honors it. An UNRECOGNIZED
-    * value fails fast: silently defaulting a typo'd off-arm (e.g.
-    * "flase") to "true" would record an on-vs-on A/B as on-vs-off. */
-  private[graft] def aqeEnv: String =
-    sys.env.getOrElse("SPARK_GRAFT_AQE", "true").trim.toLowerCase match {
-      case "true" | "1" | "on" | "yes"  => "true"
-      case "false" | "0" | "off" | "no" => "false"
-      case other => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_AQE='$other' — use true/false (or 1/0, on/off, yes/no)")
-    }
-
   /** Family of a declared key = the token after `q_` (`q_vec_ann_pq` →
     * `vec`). Used by the SEGMENT-level anchor check: three rounds of
     * correlated-tail escapes (r12 phantom tail, r13 q_join_bucketed at
@@ -653,15 +641,7 @@ object Bench {
       else "standalone"
     if (runShape == "post_suite")
       System.err.println(f"[bench] run_shape=post_suite: ${dirtyAtStart / 1024} MB dirty at launch, flushed in ${syncMs / 1000}%.1f s (residue ${math.max(dirtyNow, 0L) / 1024} MB)")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // A/B knob (default on — the 100 TB-correct setting; see NOTES on
-      // the measured local-mode delta)
-      .config("spark.sql.adaptive.enabled", Bench.aqeEnv)
-      .config(Tables.NanosAsLong, "true")
-      .config("spark.ui.enabled", "false")
+    val spark = Sessions.builder(cpus.toInt)
       // local-mode rig: nio checkpoint manager dodges the no-native-lib
       // shell-fork tax on every streaming metadata write (see
       // streaming/LocalCheckpointFileManager)
@@ -767,6 +747,9 @@ object Bench {
         Queries.cleanScratch()
         t
       }.sorted
+      // every run, not just the median and min: warm-up and run-to-run
+      // spread stay visible on stderr (stdout carries only the headline)
+      System.err.println(f"[bench] $name%-28s ${times.map(t => f"$t%.3f").mkString(" ")}")
       val (ior1, iow1) = procIo()
       val iwt1 = iowaitTicks()
       val gc1 = gcTotalMs()
@@ -779,22 +762,6 @@ object Bench {
         codeCacheUsedKb())
       (name, times(times.size / 2), times.head)
     }
-    // Key-order A/B knob (VERDICT r16 #1): `stream_first` runs the
-    // q_stream_* family before everything else, so a full sweep can test
-    // whether ~180 earlier keys' accumulated JVM/page-cache state inflates
-    // the streaming readings. Sorted order stays the default — it is what
-    // keeps rounds comparable query-by-query. The choice is stamped.
-    val keyOrder = sys.env.getOrElse("SPARK_GRAFT_BENCH_ORDER", "sorted") match {
-      case o @ ("sorted" | "stream_first") => o
-      case other => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_BENCH_ORDER='$other' — use sorted or stream_first")
-    }
-    val sortedQueries = SparkEntry.queries.toSeq.sortBy(_._1)
-    val orderedQueries =
-      if (keyOrder == "stream_first") {
-        val (st, rest) = sortedQueries.partition(_._1.startsWith("q_stream"))
-        st ++ rest
-      } else sortedQueries
     // one wall timestamp for the whole draw: stamped as `ts` AND the seed
     // of the salvage shuffle (ADVICE r19 #4 — a fixed seed made the
     // "shuffled" re-measure order identical every sweep, so end-of-salvage
@@ -803,7 +770,7 @@ object Bench {
     // while keeping it reproducible from the artifact alone)
     val sweepTs = java.time.Instant.now()
     val primary: Seq[(String, Double, Double)] =
-      orderedQueries
+      SparkEntry.queries.toSeq.sortBy(_._1)
         .filter(r => matches(r._1)).map { case (name, fn) => measure(name, fn) }
     val calibAfter = calibrateMin()
     val calibParAfter = calibrateParallelMin()
@@ -1152,7 +1119,7 @@ object Bench {
       // re-measure — the verdict's positional series excluded these, and
       // the refresh's mirrored classifier reads the same list
       s""""min_replaced":${reStamped.toSeq.sorted.map(jstr).mkString("[", ",", "]")},""" +
-      s""""key_order":${jstr(keyOrder)},""" +
+      s""""key_order":"sorted",""" +
       s""""tmpdir":${jstr(sys.props.getOrElse("java.io.tmpdir", "/tmp"))},""" +
       s""""io_read_kb_family":${famIoJson(_._1)},""" +
       s""""io_write_kb_family":${famIoJson(_._2)},""" +

@@ -138,13 +138,14 @@ object Engine {
       * pass compactIfNeeded already does.
       *
       * `build` makes the rewrite on the Handle it is given: under
-      * [[InterpretedRewriteBytes]] that is this Handle over
-      * [[Engine.interpreted]]'s child session, so a micro-scale rewrite
-      * compiles no generated code. */
+      * [[InterpretedRewriteBytes]] that is this Handle over a
+      * [[graft.Sessions.child]] with [[NoCodegen]], so a micro-scale
+      * rewrite compiles no generated code. */
     private def rewriteLog(typeId: String)(build: Handle => DataFrame): Unit = {
       val bytes = registry.dataBytes(typeId)
       val rows = build(
-        if (bytes < InterpretedRewriteBytes) copy(spark = Engine.interpreted(spark)) else this)
+        if (bytes < InterpretedRewriteBytes) copy(spark = graft.Sessions.child(spark, NoCodegen))
+        else this)
       val hasPart = rows.columns.contains("_part")
       val folded =
         if (hasPart && rows.columns.contains("id"))
@@ -327,7 +328,7 @@ object Engine {
   }
 
   /** Tables under this many data bytes compact and vacuum on
-    * [[interpreted]]'s session; larger ones on the Handle's own
+    * a [[NoCodegen]] child session; larger ones on the Handle's own
     * code-generating session. The interpreted rewrite compiles nothing but
     * pays per row. The bound is the crossover against a cold code cache,
     * one type of 4 payload columns, local[4] on a 4-core VM, 3 runs each,
@@ -347,7 +348,8 @@ object Engine {
     * item 3). */
   private[core] val InterpretedRewriteBytes = 4L * 1024 * 1024
 
-  /** What [[interpreted]] sets over the parent's conf. `factoryMode` is
+  /** What a micro-scale rewrite's [[graft.Sessions.child]] sets over the
+    * Handle's conf, so it runs without generated code. `factoryMode` is
     * marked internal in Spark; it is the switch that sends the projection,
     * predicate and ordering factories to their interpreted forms. With
     * whole-stage codegen off alone, those factories still compiled 66 and
@@ -356,33 +358,6 @@ object Engine {
   private val NoCodegen = Map(
     "spark.sql.codegen.wholeStage" -> "false",
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-
-  private val interpretedSessions =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, SparkSession]
-
-  /** Cached child of `s` that runs without generated code ([[NoCodegen]]).
-    * One warmed child per parent session, as `streaming.Declared`'s sized
-    * sessions: the first query on a new session pays its lazy SessionState
-    * init, and a Handle is often bootstrapped per run. Each call first
-    * brings the child's runtime SQL conf up to the parent's current one,
-    * so a rewrite follows the Handle's settings at the time it runs,
-    * whichever session it runs on. */
-  private def interpreted(s: SparkSession): SparkSession = {
-    // a new session already has the shared SparkConf, so only what the
-    // parent set or unset at runtime differs
-    def follow(c: SparkSession): SparkSession = {
-      val want = s.conf.getAll ++ NoCodegen
-      val have = c.conf.getAll
-      (have.keySet -- want.keySet).foreach(c.conf.unset)
-      want.foreach { case (k, v) => if (!have.get(k).contains(v)) c.conf.set(k, v) }
-      c
-    }
-    follow(interpretedSessions.getOrElseUpdate(s, {
-      val c = follow(s.newSession())
-      c.sql("SELECT 1").collect()
-      c
-    }))
-  }
 
   /** Bootstrap the engine over a warehouse directory (keyspace analog).
     * `overrideWarehouse` mirrors the reference's override_keyspaces drop

@@ -179,30 +179,21 @@ object Declared {
   private def srcSchema(s: SparkSession, src: String): org.apache.spark.sql.types.StructType =
     srcSchemaCache.getOrElseUpdate(src, s.read.parquet(src).schema)
 
-  /** Cached per-(parent, shuffle-partitions) CHILD session for the rigs
-    * that need an isolated state-sizing conf: `newSession()` itself is
-    * ~2 ms, but the first query on a fresh SessionState pays ~270 ms of
-    * lazy analyzer/catalog init — a per-run child taxed every declared
-    * streaming key with it (≈14 rigs × 0.27 s across the family). One
-    * warmed child per sizing amortizes that to once per process. Nothing
-    * is ever mutated on a child after creation, and concurrent runs on a
-    * shared child are safe: checkpoint dirs are per-run and query names
-    * are [[uniqueName]]-suffixed (an ACTIVE duplicate name on one session
-    * would otherwise refuse to start). */
-  private val sizedSessions =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, Int), SparkSession]
+  /** Warmed child of `s` with its own shuffle width, for the rigs that
+    * need an isolated state-sizing conf: [[graft.Sessions.child]] keeps one
+    * per (parent, width), so the first-query SessionState init (~270 ms)
+    * is paid once per process, not per run of every declared streaming
+    * key. The child follows the parent's other runtime settings. A call
+    * changes the child's conf only when the parent's conf changed, so
+    * concurrent runs on a shared child are safe: checkpoint dirs are
+    * per-run and query names are [[uniqueName]]-suffixed (an ACTIVE
+    * duplicate name on one session would otherwise refuse to start).
+    * AQE stays on here: disabling it for the tiny per-batch folds was
+    * measured slower (q_stream_changes 2.07–2.10 s vs 1.66–1.90 s warm),
+    * as its runtime tiny-side broadcasts and post-shuffle coalesce outweigh
+    * its per-stage re-planning at this state size. */
   private def sized(s: SparkSession, partitions: Int): SparkSession =
-    sizedSessions.getOrElseUpdate((s, partitions), {
-      val c = s.newSession()
-      c.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-      // NOTE (r18 A/B, VERDICT r17 #5): AQE stays ON here on purpose —
-      // disabling it for the tiny per-batch folds was measured SLOWER
-      // (q_stream_changes 2.07–2.10 s vs 1.66–1.90 s warm): AQE's runtime
-      // tiny-side broadcasts and post-shuffle coalesce outweigh its
-      // per-stage re-planning tax at this state size.
-      c.sql("SELECT 1").collect() // pay SessionState init here, once
-      c
-    })
+    graft.Sessions.child(s, Map("spark.sql.shuffle.partitions" -> partitions.toString))
 
   /** Alternating parquet state dirs for the foreachBatch fold rigs.
     * Generation = the framework batchId (the restart/replay discipline —
@@ -270,9 +261,10 @@ object Declared {
     if (lastBatch.get() < 0L) None else Some(fs.read(s, lastBatch.get()))
   }
 
-  /** Monotonic suffix for streaming query names: cached child sessions
-    * mean two concurrent runs of one rig can share a StreamingQueryManager,
-    * where a duplicate ACTIVE query name refuses to start. */
+  /** Monotonic suffix for streaming query names: a [[sized]] child is
+    * shared by every run of a rig on one parent, so two concurrent runs can
+    * share a StreamingQueryManager, where a duplicate ACTIVE query name
+    * refuses to start. */
   private val qnCounter = new java.util.concurrent.atomic.AtomicLong()
   private def uniqueName(base: String): String =
     base + "-" + qnCounter.incrementAndGet()

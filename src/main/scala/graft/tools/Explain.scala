@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump formatted physical plans for declared queries — used to audit
   * pushdown (PushedFilters/ReadSchema), join strategy, and whole-stage
   * codegen spans. Usage:
@@ -14,15 +12,7 @@ object Explain {
       else Seq("q_project_filter", "q_join_inner_broadcast", "q_agg_hash",
         "q_topk_orderby_limit", "q_pred_range_time", "q_merge_into",
         "q_dedup_embedding", "q_pack_sequences", "q_sample_stratified")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(graft.Tables.NanosAsLong, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.builder(8).appName("graft-explain").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     keys.foreach { k =>
       println(s"\n================ $k ================")

@@ -1,11 +1,10 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.{Queries, Tables}
+import graft.{Queries, Sessions, Tables}
 import graft.operators.GraphOps
 
 /** Once-per-round probe of the DISTRIBUTED graph plans (VERDICT r15 #4).
@@ -30,14 +29,7 @@ object GraphDistProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(Tables.NanosAsLong, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // serial probe ⇒ a global stage-completion sum attributes cleanly;

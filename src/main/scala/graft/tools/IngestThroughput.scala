@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 
 /** Measures the end-to-end ingestion pipeline's single-node throughput:
   * events.parquet → envelopes → decode/flatten/infer/evolve/append, all
@@ -11,15 +10,7 @@ import org.apache.spark.sql.SparkSession
 object IngestThroughput {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-ingest-bench")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(graft.Tables.NanosAsLong, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.builder(8).appName("graft-ingest-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val n = graft.Tables.events(spark, sfDir).count()
     val wh = java.nio.file.Files.createTempDirectory("graft-tp-wh").toString

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Derives the [[graft.ResultPins]] sf0.01 pins: prints each rows-only
   * key's exact row count and canonical content hash as paste-ready Scala
   * map entries. Run after any INTENTIONAL semantic change to a pinned key
@@ -17,13 +15,7 @@ object PinHashes {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(graft.Tables.NanosAsLong, "true")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Sessions.builder(cpus.toInt)
       .config("spark.sql.streaming.checkpointFileManagerClass",
         "graft.streaming.LocalCheckpointFileManager")
       .getOrCreate()

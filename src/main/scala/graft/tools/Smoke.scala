@@ -1,20 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke driver: runs SparkEntry.entry (the driver's t1 gate) and
   * prints the result. Usage: sbt "runMain graft.tools.Smoke [sfDir]". */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-smoke")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(graft.Tables.NanosAsLong, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.builder(8).appName("graft-smoke").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = graft.SparkEntry.entry(spark)
     df.show(50, truncate = false)

@@ -17,13 +17,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config(graft.Tables.NanosAsLong, "true")
-    .getOrCreate()
+  lazy val session: SparkSession =
+    Sessions.builder(4).appName("graft-test").getOrCreate()
 }

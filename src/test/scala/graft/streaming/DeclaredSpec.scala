@@ -396,4 +396,27 @@ class DeclaredSpec extends SparkSpec {
     f.setLastModified(1700000001000L)
     assert(k1 !== Declared.srcKeyFor("q_x", dir.toString))
   }
+
+  test("a rig's child session follows its parent's runtime conf; its overrides win") {
+    val parent = spark.newSession()
+    val width = Map("spark.sql.shuffle.partitions" -> "5")
+    val codec = "spark.sql.parquet.compression.codec"
+    parent.conf.set(codec, "gzip")
+    parent.conf.set("spark.sql.shuffle.partitions", "7")
+    val c = graft.Sessions.child(parent, width)
+    assert(c ne parent)
+    assert(c.conf.get(codec) === "gzip")
+    assert(c.conf.get("spark.sql.shuffle.partitions") === "5")
+    // a change on the parent is followed on the next call, same child
+    parent.conf.set(codec, "zstd")
+    assert(graft.Sessions.child(parent, width) eq c)
+    assert(c.conf.get(codec) === "zstd")
+    // so is an unset
+    parent.conf.unset(codec)
+    graft.Sessions.child(parent, width)
+    assert(!c.conf.getAll.contains(codec))
+    assert(c.conf.get("spark.sql.shuffle.partitions") === "5")
+    // other overrides get their own child
+    assert(graft.Sessions.child(parent, Map("spark.sql.shuffle.partitions" -> "3")) ne c)
+  }
 }
