@@ -712,7 +712,7 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // Per-key IO stamps (VERDICT r16 #6): deltas of /proc/self/io +
     // host iowait around each measure() call (all `runs` runs of the key).
-    // Salvage/rescue re-measures OVERWRITE the entry — the stamp describes
+    // Salvage re-measures OVERWRITE the entry — the stamp describes
     // the most recent sample of the key, matching the timing that survives
     // the min-merge in the common case.
     val ioStamps = scala.collection.mutable.LinkedHashMap[String, (Long, Long, Long)]()
@@ -898,37 +898,6 @@ object Bench {
           }
         }
       }
-    // Median-side rescue (ADVICE r13 #3): the headline value/value_norm are
-    // MEDIAN-derived, but a key can exit salvage with a clean min and a
-    // still-contended median (r13: q_vec_sim_join kept 2.50 med / 0.76 min
-    // after an unreplaced rerun — both sweeps' medians were hit). One more
-    // bounded pass re-measures keys whose post-merge median still exceeds
-    // 1.8× their min and keeps the better samples; a key that stays wide
-    // after this is genuinely bimodal and the stamp says so.
-    // child-measured keys are excluded: they were JUST re-measured in a
-    // fresh JVM — another measure() here would run in the (possibly
-    // degraded) parent and clobber the child witnesses with
-    // degraded-parent stamps, undoing the isolation (r19 second review)
-    val medianFlagged = merged
-      .filter(r => r._3 > 0 && r._2 / r._3 > 1.8).map(_._1)
-      .filterNot(childMeasured.contains)
-    val medianRescued = scala.collection.mutable.ArrayBuffer[String]()
-    val rescued: Seq[(String, Double, Double)] =
-      if (medianFlagged.isEmpty) merged
-      else {
-        System.err.println(s"[bench] median rescue: re-measuring ${medianFlagged.size} key(s): ${medianFlagged.mkString(",")}")
-        val remeasured = medianFlagged
-          .map(k => k -> measure(k, SparkEntry.queries(k))).toMap
-        merged.map { r =>
-          remeasured.get(r._1) match {
-            case Some(n) =>
-              if (n._2 < r._2) medianRescued += r._1
-              if (n._3 < r._3) reStamped += r._1
-              (r._1, math.min(n._2, r._2), math.min(n._3, r._3))
-            case None => r
-          }
-        }
-      }
     // SEGMENT-level anchor salvage (VERDICT r14 #1): a whole family can
     // drift at ~1.8× with every key UNDER the 2× single-key trigger (r14:
     // eight q_vec_* keys at 1.7–1.99× summed to 1.50× the family's anchor
@@ -946,7 +915,7 @@ object Bench {
     // a thousand under the threshold round after round (r15: vec family
     // at 1.297× after two flagged rounds).
     val prevFlags = prevSegmentFlags()
-    val segFlagged: Seq[String] = rescued
+    val segFlagged: Seq[String] = merged
       .filter(r => refMins.contains(r._1))
       .groupBy(r => familyOf(r._1)).toSeq
       .filter { case (_, rs) => rs.size >= 3 }
@@ -961,14 +930,17 @@ object Bench {
       }.sorted
     val segReplaced = scala.collection.mutable.ArrayBuffer[String]()
     val results: Seq[(String, Double, Double)] =
-      if (segFlagged.isEmpty) rescued
+      if (segFlagged.isEmpty) merged
       else {
-        // same child-witness protection as the median rescue above
-        val keys = rescued.map(_._1).filter(k => segFlagged.contains(familyOf(k)))
+        // child-measured keys are excluded: they were JUST re-measured in a
+        // fresh JVM — another measure() here would run in the (possibly
+        // degraded) parent and clobber the child witnesses with
+        // degraded-parent stamps, undoing the isolation (r19 second review)
+        val keys = merged.map(_._1).filter(k => segFlagged.contains(familyOf(k)))
           .filterNot(childMeasured.contains)
         val remeasured = keys
           .map(k => k -> measure(k, SparkEntry.queries(k))).toMap
-        rescued.map { r =>
+        merged.map { r =>
           remeasured.get(r._1) match {
             case Some(n) =>
               if (n._3 < r._3) { segReplaced += r._1; reStamped += r._1 }
@@ -1097,8 +1069,6 @@ object Bench {
       s""""ref_flagged":${refFlagged.map(jstr).mkString("[", ",", "]")},""" +
       s""""ref_replaced":${refSalvaged.map(jstr).mkString("[", ",", "]")},""" +
       s""""ref_salvage_mode":${jstr(refSalvageMode)},""" +
-      s""""median_rescue_rerun":${medianFlagged.map(jstr).mkString("[", ",", "]")},""" +
-      s""""median_rescue_replaced":${medianRescued.map(jstr).mkString("[", ",", "]")},""" +
       s""""segment_flagged":${segFlagged.map(jstr).mkString("[", ",", "]")},""" +
       s""""segment_replaced":${segReplaced.map(jstr).mkString("[", ",", "]")},""" +
       s""""bench_ref_path":${jstr(refPath)},""" +

@@ -11,24 +11,6 @@ import graft.core.Engine
   */
 object Flagship {
 
-  /** Props-schema inference cache, keyed per SESSION (weakly — a stopped
-    * test session's plans and file listings must not stay reachable; the
-    * Tables.load pattern) then by (CANONICALIZED events plan, scanned-file
-    * fingerprint). Plan canonicalization covers LocalRelation data and the
-    * construction logic but does NOT fingerprint file CONTENTS for
-    * file-based scans — regenerating the events data in place during a
-    * live session would otherwise serve a stale props schema (the
-    * Declared.srcKeyFor scenario). The (path, len, mtime) fingerprint of
-    * every scanned file closes that: equal keys read equal bytes, so the
-    * inference is a pure function of the key. One inference job per
-    * distinct slice per session. */
-  private val propsSchemaCache = new java.util.WeakHashMap[SparkSession,
-    collection.mutable.Map[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String),
-      org.apache.spark.sql.types.StructType]]()
-
-  private def scanFingerprint(events: org.apache.spark.sql.DataFrame): String =
-    Tables.scanFingerprint(events)
-
   /** events rows → moisturizer envelopes. `ts` rides as a full-precision
     * string (to_json would truncate a timestamp field to millis); the
     * engine's validation casts it back to timestamp because
@@ -36,15 +18,10 @@ object Flagship {
   def envelopesFrom(spark: SparkSession, events: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     // props is a JSON string column; lift it to a nested object so the
-    // pipeline exercises flatten (props__k etc.)
-    val planKey = (events.queryExecution.analyzed.canonicalized,
-      scanFingerprint(events))
-    val perSession = propsSchemaCache.synchronized {
-      propsSchemaCache.computeIfAbsent(spark, _ => collection.mutable.Map.empty)
-    }
-    val propsSchema = perSession.synchronized { // inference may run a job
-      perSession.getOrElseUpdate(planKey,
-        spark.read.json(events.select("props").as[String]).schema)
+    // pipeline exercises flatten (props__k etc.); one inference job per
+    // distinct slice per session
+    val propsSchema = Tables.memo("props-schema", events) {
+      spark.read.json(events.select("props").as[String]).schema
     }
     // NO Par.widen here (r22 A/B, negative result): widening the events
     // feed parallelized the ingest's unwrap + shape-signature aggregate

@@ -14,7 +14,10 @@ package graft
   *    regenerated at the SAME path mid-JVM re-stage instead of silently
   *    serving the stale corpus.
   * Use ONLY for inputs whose derivation is priced by another declared key
-  * (staging away a key's own gated semantics would hollow the slot). */
+  * (staging away a key's own gated semantics would hollow the slot).
+  * Users: Queries' staged frames and warehouse fixtures, the text and
+  * vector index stages, MultimodalOps' media stage, and the declared
+  * stream rigs' file sources (streaming.Declared under `withSrcKey`). */
 private[graft] object Staging {
   /** Per-key memoized build: the lazy val gives one-build-per-holder
     * semantics under the HOLDER's monitor, so a slow Spark build never

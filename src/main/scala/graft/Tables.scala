@@ -60,7 +60,7 @@ object Tables {
     * scan itself). Non-file sources contribute nothing: their bytes are in
     * the canonicalized plan. Cache keys built from (canonicalized plan,
     * this fingerprint) stay sound across an in-place regeneration of the
-    * scanned files — the Declared.srcKeyFor scenario. */
+    * scanned files (same path, new size or mtime). */
   private[graft] def scanFingerprint(df: DataFrame): String = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     df.queryExecution.analyzed.collect {
@@ -72,5 +72,25 @@ object Tables {
         case _ => ""
       }
     }.mkString("|")
+  }
+
+  /** Per-session memo of a value derived from a frame, keyed by (`tag`,
+    * canonicalized analyzed plan, [[scanFingerprint]]): equal keys read
+    * equal bytes, so `compute` is a pure function of the key and runs once
+    * per distinct frame per session. Sessions are held weakly — a stopped
+    * test session's plans and file listings must not stay reachable (the
+    * [[load]] pattern). Concurrent first calls may both compute; the first
+    * stored value wins. */
+  private val memos = new java.util.WeakHashMap[SparkSession,
+    scala.collection.concurrent.TrieMap[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String), Any]]()
+
+  private[graft] def memo[T](tag: String, df: DataFrame)(compute: => T): T = {
+    val perSession = memos.synchronized {
+      memos.computeIfAbsent(df.sparkSession,
+        _ => scala.collection.concurrent.TrieMap.empty)
+    }
+    perSession.getOrElseUpdate(
+      (tag, df.queryExecution.analyzed.canonicalized, scanFingerprint(df)),
+      compute).asInstanceOf[T]
   }
 }

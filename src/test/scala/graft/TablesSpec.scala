@@ -39,4 +39,29 @@ class TablesSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     assertNormalized(dir)
   }
+
+  test("memo recomputes after a scanned file is rewritten in place, hits while unchanged") {
+    val dir = tmpDir("tables-memo")
+    val file = java.nio.file.Paths.get(dir, "t.parquet")
+    def writeRows(n: Int, mtime: Long): Unit = {
+      val out = s"$dir/out$n"
+      (1 to n).toDF("x").coalesce(1).write.parquet(out)
+      val part = new java.io.File(out).listFiles().find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.copy(part.toPath, file,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      assert(file.toFile.setLastModified(mtime))
+    }
+    var computed = 0
+    def memoOnFreshRead(): Int =
+      Tables.memo("spec", spark.read.parquet(file.toString)) { computed += 1; computed }
+    writeRows(1, 1700000000000L)
+    assert(memoOnFreshRead() === 1)
+    assert(memoOnFreshRead() === 1) // unchanged file: hit
+    writeRows(3, 1700000001000L) // same path, new size and mtime
+    assert(memoOnFreshRead() === 2)
+    assert(memoOnFreshRead() === 2)
+    assert(file.toFile.setLastModified(1700000002000L)) // mtime alone
+    assert(memoOnFreshRead() === 3)
+    assert(Tables.memo("other", spark.read.parquet(file.toString))(-1) === -1) // per tag
+  }
 }

@@ -382,7 +382,7 @@ class DeclaredSpec extends SparkSpec {
     assert(rows(streamed) == rows(batch))
   }
 
-  test("srcKeyFor: regenerated input files invalidate the cross-JVM source cache key") {
+  test("srcKeyFor: regenerated input files invalidate the source cache key") {
     val dir = java.nio.file.Files.createTempDirectory("graft-srckey").toFile
     val f = new java.io.File(dir, "events.parquet")
     java.nio.file.Files.write(f.toPath, "v1".getBytes)
@@ -395,6 +395,25 @@ class DeclaredSpec extends SparkSpec {
     java.nio.file.Files.write(f.toPath, "v2-longer".getBytes)
     f.setLastModified(1700000001000L)
     assert(k1 !== Declared.srcKeyFor("q_x", dir.toString))
+  }
+
+  test("a keyed stream source stages once per JVM and writes no cross-JVM cache") {
+    // a private copy of the input: no earlier spec in this JVM can have
+    // staged a source under this input dir's key
+    val d = tmpDir("graft-srcstage")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf(), "events.parquet"),
+      java.nio.file.Paths.get(d, "events.parquet"))
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    def staged(): Set[String] =
+      tmp.list().filter(_.startsWith("graft-stream-src")).toSet
+    def crossJvmCache(): Option[Set[String]] =
+      Option(new java.io.File(tmp, "graft-src-cache").list()).map(_.toSet)
+    val (stagedBefore, cacheBefore) = (staged(), crossJvmCache())
+    val first = rows(Queries.qStreamTumbling(spark, d))
+    val second = rows(Queries.qStreamTumbling(spark, d))
+    assert(first.nonEmpty && first == second)
+    assert((staged() -- stagedBefore).size === 1)
+    assert(crossJvmCache() === cacheBefore)
   }
 
   test("a rig's child session follows its parent's runtime conf; its overrides win") {
