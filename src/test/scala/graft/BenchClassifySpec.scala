@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (VERDICT r19 #2): the classifier's three verdicts on the adjudicated
   * r19 signal shapes (thresholds MIRRORED in tools/refresh_bench_ref.py
   * `classify()` — tools/test_refresh_bench_ref.py pins the same shapes
-  * there), and the string-aware JSON object extraction the child-error
-  * guard depends on (ADVICE r19 #2). */
+  * there), and the readers of the anchor file the verdict compares
+  * against. */
 class BenchClassifySpec extends AnyFunSuite {
 
   private def mins(n: Int, base: Double, inflFrac: Double = 0.0,
@@ -27,13 +27,13 @@ class BenchClassifySpec extends AnyFunSuite {
 
   test("quiet draw: r19 committed-sweep shape") {
     val (v, _) = Bench.classifyDraw(0.738, 0.747, 0.68, 0.101, 0.102,
-      mins(217, 1.09, inflFrac = 0.032), anchor, Set.empty)
+      mins(217, 1.09, inflFrac = 0.032), anchor)
     assert(v === "quiet")
   }
 
   test("contended draw: r19 driver-sweep shape (par drift + broad inflation)") {
     val (v, s) = Bench.classifyDraw(0.738, 0.747, 0.68, 0.111, 0.124,
-      mins(217, 1.21, inflFrac = 0.078), anchor, Set.empty)
+      mins(217, 1.21, inflFrac = 0.078), anchor)
     assert(v === "contended", s)
   }
 
@@ -43,51 +43,26 @@ class BenchClassifySpec extends AnyFunSuite {
     // — the old 1.08 threshold over-flagged every draw; the one genuinely
     // loaded r22 draw read 1.40x with broad inflation
     val (v1, s1) = Bench.classifyDraw(0.857, 0.852, 0.85, 0.139, 0.116,
-      mins(217, 1.05, inflFrac = 0.03), anchor, Set.empty)
+      mins(217, 1.05, inflFrac = 0.03), anchor)
     assert(v1 === "quiet", s1)
     val (v2, s2) = Bench.classifyDraw(0.864, 0.858, 0.85, 0.183, 0.131,
-      mins(217, 1.05, inflFrac = 0.03), anchor, Set.empty)
+      mins(217, 1.05, inflFrac = 0.03), anchor)
     assert(v2 === "contended", s2)
   }
 
   test("jit_tail draw: quiet probes, tail quartile inflated vs floors") {
     val (v, s) = Bench.classifyDraw(0.738, 0.747, 0.68, 0.101, 0.102,
-      mins(217, 1.0, tail = Some(1.4)), anchor, Set.empty)
-    assert(v === "jit_tail", s)
-  }
-
-  test("position-excluded keys can't flatten a real tail") {
-    // 30 early-run keys carry inflated REPLACED mins; excluding them
-    // keeps the head median honest (the r20-review scenario)
-    val m = mins(217, 1.0, tail = Some(1.3)).map { case (k, v) =>
-      if (k < "q_k030") k -> 1.35 else k -> v
-    }
-    val excl = m.map(_._1).filter(_ < "q_k030").toSet
-    val (v, s) = Bench.classifyDraw(0.738, 0.747, 0.68, 0.101, 0.102,
-      m, anchor, excl)
+      mins(217, 1.0, tail = Some(1.4)), anchor)
     assert(v === "jit_tail", s)
   }
 
   test("no anchor => probes alone decide") {
     val (v1, _) = Bench.classifyDraw(0.7, 0.7, 0.68, 0.10, 0.10,
-      mins(217, 5.0), Map.empty, Set.empty)
+      mins(217, 5.0), Map.empty)
     assert(v1 === "quiet")
     val (v2, _) = Bench.classifyDraw(0.7, 0.95, 0.68, 0.10, 0.10,
-      mins(217, 1.0), Map.empty, Set.empty)
+      mins(217, 1.0), Map.empty)
     assert(v2 === "contended") // calib drift 1.36 > 1.30
-  }
-
-  test("jsonObjectBody survives braces and escaped quotes inside strings") {
-    val txt = """{"queries":{"q_a":1.0},"errors":{"q_bad":"Boom: {\"x\":1} \\ end"},"value":2.0}"""
-    val body = Bench.jsonObjectBody(txt, "errors")
-    assert(body.contains("\"q_bad\":\""))
-    assert(!body.contains("value"))
-    assert(Bench.jsonObjectBody(txt, "absent") === "")
-    // the old whole-text scan's false positive: a key name inside an
-    // ERROR MESSAGE must not read as that key having errored
-    val txt2 = """{"errors":{"q_a":"parent of \"q_b\": failed"},"queries":{"q_b":1.0}}"""
-    val b2 = Bench.jsonObjectBody(txt2, "errors")
-    assert(b2.contains("\"q_a\":\"") && !b2.contains("\"q_b\":\""))
   }
 
   test("loadKeyMap reads flat numeric maps through the string-aware walk") {
@@ -97,16 +72,12 @@ class BenchClassifySpec extends AnyFunSuite {
     assert(Bench.loadKeyMap(txt, "nope") === Map.empty)
   }
 
-  test("jsonObjectKeys reads only top-level keys (ADVICE r20 #3)") {
-    // an error VALUE embedding an escaped JSON fragment for another key
-    // must not read as that key having errored
-    val body = Bench.jsonObjectBody(
-      """{"errors":{"q_a":"wrapped: \"q_b\":\"boom\" tail","q_c":"x"}}""",
-      "errors")
-    assert(Bench.jsonObjectKeys(body) === Set("q_a", "q_c"))
-    // nested objects/arrays inside values don't contribute keys
-    val b2 = """"q_a":{"inner":1},"q_b":[{"deep":"v"}],"q_c":"s""""
-    assert(Bench.jsonObjectKeys(b2) === Set("q_a", "q_b", "q_c"))
-    assert(Bench.jsonObjectKeys("") === Set.empty[String])
+  test("loadRefMins/loadRefField read the committed local[32] anchor") {
+    val ref = "BENCH_ref.local32.json"
+    assert(Bench.loadRefMins(ref).size === 218)
+    assert(Bench.loadRefField(ref, "sf_fingerprint") === "661ed51a2ee35319")
+    val missing = "BENCH_ref.absent.json"
+    assert(Bench.loadRefMins(missing) === Map.empty)
+    assert(Bench.loadRefField(missing, "sf_fingerprint") === "")
   }
 }

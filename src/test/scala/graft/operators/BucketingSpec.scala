@@ -52,7 +52,7 @@ class BucketingSpec extends SparkSpec {
   test("writeBucketed never deletes an EXTERNAL table's data directory") {
     // an external table's location is user-owned: overwriting the NAME may
     // drop the catalog entry, but the underlying files must survive
-    val dir = java.nio.file.Files.createTempDirectory("bspec-ext").toString
+    val dir = tmpDir("bspec-ext")
     val o = graft.Tables.orders(spark, sf()).select("o_orderkey", "o_totalprice")
     o.write.mode("overwrite").parquet(dir)
     spark.sql(s"CREATE TABLE bspec_ext (o_orderkey BIGINT, o_totalprice DOUBLE) " +

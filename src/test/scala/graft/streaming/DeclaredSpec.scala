@@ -339,7 +339,7 @@ class DeclaredSpec extends SparkSpec {
     val env1 = Seq(
       msg(1, "2024-01-02 00:00:00", "\"conflict\""),
       msg(2, "2024-01-02 00:00:00", "\"123.5\"")).toDF("message")
-    val dir = java.nio.file.Files.createTempDirectory("stream-quarantine-twin").toString
+    val dir = tmpDir("stream-quarantine-twin")
     val served = graft.streaming.Declared
       .engineIngestEvolving(spark, Seq(env0, env1), dir, serveType = "t")
       .select(col("id"), col("value").cast("double"))
@@ -360,7 +360,7 @@ class DeclaredSpec extends SparkSpec {
     val uninterrupted = graft.streaming.Declared.changesMaintain(spark,
         Tables.events(spark, sf())
           .filter(org.apache.spark.sql.functions.col("event_type") === "signup"),
-        java.nio.file.Files.createTempDirectory("cdc-uninterrupted").toString)
+        tmpDir("cdc-uninterrupted"))
       .select("user_id", "d", "batch", "change", "value_before", "value_after")
       .orderBy("batch", "user_id", "d")
     assert(rows(restarted) == rows(uninterrupted))
@@ -383,7 +383,7 @@ class DeclaredSpec extends SparkSpec {
   }
 
   test("srcKeyFor: regenerated input files invalidate the source cache key") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-srckey").toFile
+    val dir = new java.io.File(tmpDir("graft-srckey"))
     val f = new java.io.File(dir, "events.parquet")
     java.nio.file.Files.write(f.toPath, "v1".getBytes)
     f.setLastModified(1700000000000L)

@@ -12,6 +12,8 @@ if [ "${SPARK_GRAFT_SKIP_SF10_PINS:-}" = "1" ]; then
   unset SPARK_GRAFT_SKIP_SF10_PINS
 fi
 sbt -batch test 2>&1 | grep -E '\*\*\*|Tests:' | tail -2
+python3 tools/test_check_oracle.py
+python3 tools/test_refresh_bench_ref.py
 
 echo "== 2/5 t1 smoke (flagship entry, sf0.001)"
 sbt -batch "runMain graft.tools.Smoke" 2>&1 | grep -E 'rows=' | tail -1
@@ -56,58 +58,6 @@ fi
 export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" \
   2>&1 | grep -oE '"value":[0-9.]+' | tail -1
-
-# Contention rerun (VERDICT r10 #6): a key whose median is >1.8x its own
-# min was hit by transient contention during the sweep — rerun exactly
-# those keys once and merge the better samples into BENCH_full.json, so a
-# committed artifact never carries phantom regressions. (Keys whose median
-# and min inflate TOGETHER — sustained contention — are caught by the probe
-# checks below, not by this ratio.)
-FLAGGED=$(python3 - <<'EOF'
-import json
-b = json.load(open("BENCH_full.json"))
-q, qm = b.get("queries", {}), b.get("queries_min", {})
-flagged = [k for k in q if qm.get(k, 0) > 0 and q[k] / qm[k] > 1.8]
-print(",".join(sorted(flagged)))
-EOF
-)
-if [ -n "$FLAGGED" ]; then
-  echo "[gates] contention-flagged keys (median/min > 1.8x): $FLAGGED — rerunning once"
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-    SPARK_GRAFT_BENCH_FILTER="$FLAGGED" \
-    SPARK_GRAFT_BENCH_FULL=/tmp/graft-bench-rerun.json \
-    sbt -batch "runMain graft.Bench" >/dev/null 2>&1 || true
-  GRAFT_FLAGGED="$FLAGGED" python3 - <<'EOF'
-import json, os
-try:
-    rerun = json.load(open("/tmp/graft-bench-rerun.json"))
-except Exception as e:
-    raise SystemExit(f"[gates] rerun artifact missing: {e}")
-b = json.load(open("BENCH_full.json"))
-q, qm = b["queries"], b["queries_min"]
-# the bench filter substring-matches, so the rerun may have measured
-# superset keys (q_x also matches q_x_longer) — merge ONLY flagged ones
-flagged = set(os.environ["GRAFT_FLAGGED"].split(","))
-replaced = []
-for k, med in rerun.get("queries", {}).items():
-    if k in flagged and k in q and med < q[k]:
-        q[k] = med
-        qm[k] = min(qm.get(k, med), rerun.get("queries_min", {}).get(k, med))
-        replaced.append(k)
-# keep the artifact self-consistent: totals = sums of the (rounded)
-# per-key entries; normalized totals reuse the ORIGINAL sweep's probe
-norm = b["value_norm"] / b["value"] if b.get("value") else 1.0
-b["value"] = round(sum(q.values()), 3)
-b["total_min"] = round(sum(qm.values()), 3)
-b["value_norm"] = round(b["value"] * norm, 3)
-b["total_min_norm"] = round(b["total_min"] * norm, 3)
-b["contention_rerun"] = sorted(flagged & set(rerun.get("queries", {})))
-b["contention_replaced"] = replaced
-with open("BENCH_full.json", "w") as f:
-    f.write(json.dumps(b) + "\n")
-print(f"[gates] contention rerun merged: replaced {len(replaced)} key(s): {replaced}")
-EOF
-fi
 
 # Contention self-check: the bench stamps BENCH_full.json with a fixed
 # single-thread CPU probe timed before and after the sweep. If the two
@@ -171,11 +121,11 @@ else:
 # reference anchor (VERDICT r12 #1): every check above is a ratio of the
 # sweep against itself — localized SUSTAINED contention (one key 15x with
 # median/min <= 1.3 and whole-sweep ratio ~1.1) passes them all. Compare
-# each key's min against the committed quiet reference map; Bench already
-# re-measured (and stamped) keys over 2x (trigger dropped from 2.5x at r14
-# — VERDICT r13 #5: a real 2.13x drift slipped under 2.5x; the anchor map
-# is refreshed every round close so 2x clears quiet jitter), so anything
-# still over here was confirmed slow by its re-measure or predates the ref.
+# each key's min against the committed quiet reference map (2x: VERDICT
+# r13 #5 — a real 2.13x drift slipped under 2.5x; the anchor map is
+# refreshed every round close so 2x clears quiet jitter). Bench reports
+# every sample as measured, so a key over 2x is either a regression or a
+# contended draw — the artifact's `degradation` stamp tells which.
 # single anchor source per config (VERDICT r17 #7) — no legacy fallback
 ref_path = b.get("bench_ref_path") or f"BENCH_ref.local{b.get('cpus','')}.json"
 try:
@@ -186,14 +136,13 @@ if ref:
     qm = b.get("queries_min", {})
     over = sorted((k, qm[k], ref[k]) for k in qm
                   if ref.get(k, 0) > 0 and qm[k] > 2.0 * ref[k])
-    stamped = set(b.get("ref_flagged", []) + b.get("salvage_rerun", []))
     if over:
         print(f"[gates] {len(over)} key(s) min >2x the committed quiet reference ({ref_path}):")
         for k, v, r in over:
-            tag = "re-measured in-sweep, confirmed" if k in stamped else "** UNCONFIRMED — bench ran without the ref? **"
-            print(f"[gates]   {k}: {v}s vs ref {r}s ({tag})")
-        if any(k not in stamped for k, _, _ in over):
-            print(f"[gates] ** WARNING: unconfirmed reference outliers — rerun the bench with {ref_path} present **")
+            print(f"[gates]   {k}: {v}s vs ref {r}s")
+        print(f"[gates] ** WARNING: reference outliers in a draw stamped "
+              f"degradation={b.get('degradation')!r} — rerun on a quiet host "
+              f"before calling them regressions **")
     else:
         print(f"[gates] reference check: all {len(qm)} keys within 2x of {ref_path} mins")
 else:

@@ -379,7 +379,10 @@ def test_classifier_new_epoch_par_jitter_is_quiet():
 
 if __name__ == "__main__":
     fns = [v for k, v in sorted(globals().items()) if k.startswith("test_")]
-    for fn in fns:
-        fn()
-        print(f"PASS {fn.__name__}")
+    # every fixture dir goes under one root that is removed at the end
+    with tempfile.TemporaryDirectory(prefix="graft-refresh-test-") as root:
+        tempfile.tempdir = root
+        for fn in fns:
+            fn()
+            print(f"PASS {fn.__name__}")
     print(f"{len(fns)} passed")
