@@ -428,7 +428,6 @@ object Bench {
       .config("spark.sql.streaming.checkpointFileManagerClass",
         "graft.streaming.LocalCheckpointFileManager")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // JVM/session warmup outside the timed loop: one trivial job + parquet
     // footer reads so the first measured query doesn't absorb session init
     spark.range(1000).selectExpr("sum(id)").collect()

@@ -1229,10 +1229,9 @@ object Queries {
     * batch exact heavy hitters, so q_agg_heavy_hitters' oracle hashes
     * the streaming run. */
   val qStreamHeavyHitters: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("heavyHittersMaintain", d))(
-        streaming.Declared.heavyHittersMaintain(s,
+    streaming.Declared.heavyHittersMaintain(s,
         Tables.documents(s, d).select("doc_id", "text"), "text", k = 200,
-        scratchDir("stream-hh")))
+        scratchDir("stream-hh"))
       .orderBy("word")
 
   /** STREAMING drift maintenance ([[streaming.Declared.driftMaintain]]):
@@ -1241,9 +1240,8 @@ object Queries {
     * end-of-stream; equals batch [[qDriftKs]] by associativity of +, so
     * the same oracle hashes the streaming run. */
   val qStreamDrift: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("driftMaintain", d))(
-        streaming.Declared.driftMaintain(s, Tables.events(s, d),
-        scratchDir("stream-drift")))
+    streaming.Declared.driftMaintain(s, Tables.events(s, d),
+        scratchDir("stream-drift"))
       .orderBy("event_type")
 
   /** STREAMING trend maintenance ([[streaming.Declared.trendMaintain]]):
@@ -1252,9 +1250,8 @@ object Queries {
     * equals batch [[qTrendOls]] by associativity of +, so the same oracle
     * hashes the streaming run. */
   val qStreamTrend: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("trendMaintain", d))(
-        streaming.Declared.trendMaintain(s, Tables.events(s, d),
-        scratchDir("stream-trend")))
+    streaming.Declared.trendMaintain(s, Tables.events(s, d),
+        scratchDir("stream-trend"))
       .orderBy("event_type")
 
   val qRollup: Q = (s, d) =>
@@ -1685,9 +1682,8 @@ object Queries {
     * multi-file source, several micro-batches), with outputs constructed to
     * be micro-batch-invariant so the batch oracle checks them exactly. */
   val qStreamTumbling: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("tumblingAgg", d))(
-        streaming.Declared.tumblingAgg(s, Tables.events(s, d),
-        scratchDir("stream-tumb")))
+    streaming.Declared.tumblingAgg(s, Tables.events(s, d),
+        scratchDir("stream-tumb"))
       .orderBy("window_start", "event_type")
 
   /** Streaming SLIDING-window aggregation: the built-in STATEFUL
@@ -1696,9 +1692,8 @@ object Queries {
     * foreachBatch-partials pattern; the overlap (1 h / 30 min hop) puts
     * each row in two window states. Shares q_window_sliding's oracle. */
   val qStreamSliding: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("slidingAgg", d))(
-        streaming.Declared.slidingAgg(s, Tables.events(s, d),
-        scratchDir("stream-slide")))
+    streaming.Declared.slidingAgg(s, Tables.events(s, d),
+        scratchDir("stream-slide"))
       .orderBy("window_start", "event_type")
 
   /** The reference's consumer→engine main loop as a streaming run under
@@ -1709,9 +1704,8 @@ object Queries {
   val qStreamEngineIngest: Q = (s, d) => {
     val events = Tables.events(s, d)
       .filter(col("event_type") === "signup" && col("event_id") <= 1500)
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("engineIngest", d))(
-        streaming.Declared.engineIngest(s, Flagship.envelopesFrom(s, events),
-        scratchDir("stream-engine"), serveType = "signup"))
+    streaming.Declared.engineIngest(s, Flagship.envelopesFrom(s, events),
+        scratchDir("stream-engine"), serveType = "signup")
       .select(
         col("id").cast(LongType).as("event_id"),
         col("user_id"), col("value"),
@@ -1731,10 +1725,9 @@ object Queries {
   val qStreamCompact: Q = (s, d) => {
     val events = Tables.events(s, d)
       .filter(col("event_type") === "signup" && col("event_id") <= 1000)
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("engineIngestCompacting", d))(
-        streaming.Declared.engineIngestCompacting(s,
+    streaming.Declared.engineIngestCompacting(s,
         Flagship.envelopesFrom(s, events), scratchDir("stream-compact"),
-        serveType = "signup", maxFilesPerType = 16))
+        serveType = "signup", maxFilesPerType = 16)
       .select(
         col("id").cast(LongType).as("event_id"),
         col("user_id"), col("value"),
@@ -1744,24 +1737,21 @@ object Queries {
   }
 
   val qStreamDedup: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("dedupKeys", d))(
-        streaming.Declared.dedupKeys(s, Tables.events(s, d),
-        scratchDir("stream-dedup")))
+    streaming.Declared.dedupKeys(s, Tables.events(s, d),
+        scratchDir("stream-dedup"))
       .orderBy("user_id", "event_type")
 
   /** Bounded-state streaming dedup (dropDuplicatesWithinWatermark) — the
     * watermark-evicted production shape; output batch-invariant because the
     * horizon spans the fixture (see [[streaming.Declared.dedupKeysWatermarked]]). */
   val qStreamDedupWatermark: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("dedupKeysWatermarked", d))(
-        streaming.Declared.dedupKeysWatermarked(s, Tables.events(s, d),
-        scratchDir("stream-dedup-wm")))
+    streaming.Declared.dedupKeysWatermarked(s, Tables.events(s, d),
+        scratchDir("stream-dedup-wm"))
       .orderBy("user_id", "event_type")
 
   val qStreamLww: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("lwwServe", d))(
-        streaming.Declared.lwwServe(s, Tables.events(s, d),
-        scratchDir("stream-lww")))
+    streaming.Declared.lwwServe(s, Tables.events(s, d),
+        scratchDir("stream-lww"))
       .select("user_id", "event_id", "ts", "event_type", "value")
       .orderBy("user_id")
 
@@ -1772,9 +1762,8 @@ object Queries {
     * row fails the hash, putting the drop path itself under the gate
     * ([[streaming.Declared.dedupDropLate]]). */
   val qStreamLateDrop: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("dedupDropLate", d))(
-        streaming.Declared.dedupDropLate(s, Tables.events(s, d),
-        scratchDir("stream-late-drop")))
+    streaming.Declared.dedupDropLate(s, Tables.events(s, d),
+        scratchDir("stream-late-drop"))
       .orderBy("user_id", "event_type")
 
   /** STREAM-STREAM inner join under the oracle gate: clicks and purchases
@@ -1785,9 +1774,8 @@ object Queries {
     * equals DuckDB's batch interval join regardless of how the two sides'
     * micro-batches interleave ([[streaming.Declared.streamStreamJoin]]). */
   val qStreamStreamJoin: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("streamStreamJoin", d))(
-        streaming.Declared.streamStreamJoin(s, Tables.events(s, d),
-        scratchDir("stream-ss-join")))
+    streaming.Declared.streamStreamJoin(s, Tables.events(s, d),
+        scratchDir("stream-ss-join"))
       .orderBy("user_id", "click_id", "buy_id")
 
   /** Stream-STATIC broadcast join under the oracle gate: per-event
@@ -1796,9 +1784,8 @@ object Queries {
     * append output trivially equals the batch join
     * ([[streaming.Declared.streamStaticJoin]]). */
   val qStreamStaticJoin: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("streamStaticJoin", d))(
-        streaming.Declared.streamStaticJoin(s, Tables.events(s, d),
-        scratchDir("stream-static-join")))
+    streaming.Declared.streamStaticJoin(s, Tables.events(s, d),
+        scratchDir("stream-static-join"))
       .orderBy("event_id")
 
   /** Stream-stream LEFT OUTER join under the oracle gate: unlike the
@@ -1809,9 +1796,8 @@ object Queries {
     * every window at end-of-stream and are filtered from the output
     * ([[streaming.Declared.streamStreamJoinOuter]]). */
   val qStreamStreamJoinOuter: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("streamStreamJoinOuter", d))(
-        streaming.Declared.streamStreamJoinOuter(s, Tables.events(s, d),
-        scratchDir("stream-ss-join-outer")))
+    streaming.Declared.streamStreamJoinOuter(s, Tables.events(s, d),
+        scratchDir("stream-ss-join-outer"))
       .orderBy("user_id", "click_id", "buy_id")
 
   /** Stream-stream FULL OUTER join under the oracle gate: both sides'
@@ -1821,9 +1807,8 @@ object Queries {
     * eviction path under the hash
     * ([[streaming.Declared.streamStreamJoinFull]]). */
   val qStreamStreamJoinFull: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("streamStreamJoinFull", d))(
-        streaming.Declared.streamStreamJoinFull(s, Tables.events(s, d),
-        scratchDir("stream-ss-join-full")))
+    streaming.Declared.streamStreamJoinFull(s, Tables.events(s, d),
+        scratchDir("stream-ss-join-full"))
       .orderBy("user_id", "click_id", "buy_id")
 
   /** STREAMING sessionization under the oracle gate: flatMapGroupsWithState
@@ -1834,9 +1819,8 @@ object Queries {
     * oracle hashes the streaming run exactly
     * ([[streaming.Declared.sessionWindows]]). */
   val qStreamSession: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("sessionWindows", d))(
-        streaming.Declared.sessionWindows(s, Tables.events(s, d),
-        scratchDir("stream-session"), gapMinutes = 30))
+    streaming.Declared.sessionWindows(s, Tables.events(s, d),
+        scratchDir("stream-session"), gapMinutes = 30)
       .orderBy("user_id", "session_start")
 
   /** Sessionization as gaps-and-islands: a per-user running count of
@@ -1927,9 +1911,8 @@ object Queries {
     * batch scd2 over all events seen, so q_scd2_history's oracle hashes
     * the streaming run. */
   val qStreamScd2: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("scd2Maintain", d))(
-        streaming.Declared.scd2Maintain(s, Tables.events(s, d),
-        scratchDir("stream-scd2")))
+    streaming.Declared.scd2Maintain(s, Tables.events(s, d),
+        scratchDir("stream-scd2"))
       .select(col("user_id"), col("event_id"), col("event_type"),
         col("valid_from"), col("valid_to"), col("is_current"))
       .orderBy("user_id", "valid_from", "event_id")
@@ -1946,9 +1929,8 @@ object Queries {
     * wrong before-image is a hash failure. The oracle replays both LWW
     * states and the null-safe diff in SQL with the same µs cut. */
   val qStreamChanges: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("changesMaintain", d))(
-        streaming.Declared.changesMaintain(s, Tables.events(s, d),
-        scratchDir("stream-changes")))
+    streaming.Declared.changesMaintain(s, Tables.events(s, d),
+        scratchDir("stream-changes"))
       .select(col("user_id"), col("d"), col("batch"), col("change"),
         col("value_before"), col("value_after"))
       .orderBy("batch", "user_id", "d")
@@ -1976,11 +1958,10 @@ object Queries {
       df.select(to_json(struct(lit("signup").as("type_id"),
         struct(dataCols: _*).as("data"))).as("message"))
     }
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("engineIngestEvolving", d))(
-        streaming.Declared.engineIngestEvolving(s,
+    streaming.Declared.engineIngestEvolving(s,
         Seq(env(events.filter(col("event_id") <= 700), withExtra = false),
           env(events.filter(col("event_id") > 700), withExtra = true)),
-        scratchDir("stream-evolve"), serveType = "signup"))
+        scratchDir("stream-evolve"), serveType = "signup")
       .select(col("id").cast(LongType).as("event_id"),
         col("user_id"), col("value"), col("extra"),
         col("last_modified").as("ts"))
@@ -2011,11 +1992,10 @@ object Queries {
       """{"data":{"id":"999991","value":1}}""",
       """{"type_id":"bad type!","data":{"id":"999992","value":2}}""",
       "").toDF("message")
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("engineIngestEvolving2", d))(
-        streaming.Declared.engineIngestEvolving(s,
+    streaming.Declared.engineIngestEvolving(s,
         Seq(env(events.filter(col("event_id") <= 600)),
           env(events.filter(col("event_id") > 600)).unionByName(poison)),
-        scratchDir("stream-dead-letter"), serveType = "signup"))
+        scratchDir("stream-dead-letter"), serveType = "signup")
       .select(col("id").cast(LongType).as("event_id"),
         col("user_id"), col("value"),
         col("last_modified").as("ts"))
@@ -2052,9 +2032,8 @@ object Queries {
         when(col("event_id") % 4 === 0, lit("conflict"))
           .otherwise((col("value") + 1000).cast(StringType)).as("value")
       ).as("data"))).as("message"))
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("engineIngestEvolving3", d))(
-        streaming.Declared.engineIngestEvolving(s, Seq(env0, env1),
-        scratchDir("stream-quarantine"), serveType = "signup"))
+    streaming.Declared.engineIngestEvolving(s, Seq(env0, env1),
+        scratchDir("stream-quarantine"), serveType = "signup")
       .select(col("id").cast(LongType).as("event_id"),
         col("user_id"), col("value"),
         col("last_modified").as("ts"))
@@ -2073,10 +2052,9 @@ object Queries {
     * outcomes stay live on the slice (787 b0-inserts / 7 cut-day updates
     * / 824 b1-inserts / 780 unchanged-absent at sf0.01). */
   val qStreamChangesRestart: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("changesMaintainRestart", d))(
-        streaming.Declared.changesMaintainRestart(s,
+    streaming.Declared.changesMaintainRestart(s,
         Tables.events(s, d).filter(col("event_type") === "signup"),
-        scratchDir("stream-changes-restart")))
+        scratchDir("stream-changes-restart"))
       .select(col("user_id"), col("d"), col("batch"), col("change"),
         col("value_before"), col("value_after"))
       .orderBy("batch", "user_id", "d")
@@ -2525,9 +2503,8 @@ object Queries {
     * equals batch [[qInvertedIndex]] for every batching and the same
     * oracle hashes the streaming run. */
   val qStreamTextIndex: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("invertedIndexMaintain", d))(
-        streaming.Declared.invertedIndexMaintain(s, Tables.documents(s, d),
-        "doc_id", "text", cap = 100, scratchDir("stream-tidx")))
+    streaming.Declared.invertedIndexMaintain(s, Tables.documents(s, d),
+        "doc_id", "text", cap = 100, scratchDir("stream-tidx"))
       .withColumn("postings", array_join(col("postings"), ","))
       .orderBy("term")
 
@@ -2608,13 +2585,12 @@ object Queries {
     * DuckDB oracle hashes the streaming run. Same bounded slice + ASCII
     * gate as q_dedup_minhash_fixed. */
   val qStreamDedupMinhash: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("minhashIndexMaintain", d))(
-        streaming.Declared.minhashIndexMaintain(s,
+    streaming.Declared.minhashIndexMaintain(s,
         Tables.documents(s, d)
           .filter(col("doc_id") < 600 && col("text").rlike("\\A[ -~]*\\z")),
         "doc_id", "text",
         k = 3, bands = 8, rowsPerBand = 4, threshold = 0.5, maxBucket = 1000,
-        scratchDir("stream-mh")))
+        scratchDir("stream-mh"))
       .orderBy("id_a", "id_b")
 
   /** END-TO-END PRE-TRAINING DATA PIPELINE under ONE hash gate — the
@@ -2664,12 +2640,11 @@ object Queries {
     * stage sees only the final state), so the same four-stage CTE oracle
     * hashes the streaming run. Same bounded slice + ASCII gate. */
   val qStreamPipelinePretrain: Q = (s, d) =>
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("pipelinePretrainMaintain", d))(
-        streaming.Declared.pipelinePretrainMaintain(s,
+    streaming.Declared.pipelinePretrainMaintain(s,
         Tables.documents(s, d)
           .filter(col("doc_id") < 600 && col("text").rlike("\\A[ -~]*\\z")),
         k = 3, bands = 8, rowsPerBand = 4, threshold = 0.5, maxBucket = 1000,
-        scratchDir("stream-pipeline")))
+        scratchDir("stream-pipeline"))
       .orderBy("doc_id", "chunk_idx")
 
   /** The PRODUCTION MinHash+LSH throughput path re-declared (VERDICT r12
@@ -2759,9 +2734,8 @@ object Queries {
       explode(transform(DedupOps.shingles(col("text"), 8),
         x => xxhash64(x))).as("sh"))
     val pairs = DedupOps.keyedPairs(sh, "sh", "doc_id", minN = 2, maxN = 10)
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("incrementalClusters", d))(
-        streaming.Declared.incrementalClusters(s, docs, "doc_id", pairs,
-        scratchDir("stream-cc")))
+    streaming.Declared.incrementalClusters(s, docs, "doc_id", pairs,
+        scratchDir("stream-cc"))
       .orderBy("doc_id")
   }
 
@@ -3017,10 +2991,9 @@ object Queries {
     * only final state), so the same GENERATED oracle hashes it — the key
     * gates the maintain→serve hand-off. */
   val qStreamHybrid: Q = (s, d) => {
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("hybridMaintainServe", d))(
-        streaming.Declared.hybridMaintainServe(s, Tables.documents(s, d),
+    streaming.Declared.hybridMaintainServe(s, Tables.documents(s, d),
           Tables.embeddings(s, d), n = 50, nCentroids = 16, nProbe = 6,
-          scratchDir("stream-hybrid")))
+          scratchDir("stream-hybrid"))
       .orderBy("query_id", "rank")
   }
 
@@ -3094,24 +3067,14 @@ object Queries {
         .parquet(d0 + "/postings")
     }
 
-  // probe-planning memo (the codebookCache doctrine): a bucket list is
-  // computed once per (index dir, QUERY-SET identity) — the memo value
-  // depends on BOTH (VERDICT r20 ADVICE: keyed on the dir alone, a future
-  // second consumer of the same staged index with a different query set
-  // would silently serve the first caller's buckets). The index dir is
-  // immutable once staged; a regenerated input lands at a NEW dir via
-  // the fingerprint.
-  private val queryBucketsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Seq[Long]]
-
   /** Serve stage over the staged persisted postings index: the query
     * postings derive from the (pushdown-filtered) 5 query documents,
     * their token buckets collect driver-side (metadata scale — distinct
-    * query tokens, memoized per index dir) and feed a LITERAL bucket
-    * filter, so the index scan lists and reads only the query tokens'
-    * FILES (PlanContractSpec asserts the PartitionFilters); ranking is
-    * the identical [[operators.TextOps.postingsOverlapTopN]] kernel the
-    * computed path runs — indexed ≡ computed by construction
+    * query tokens, memoized per index dir and query frame) and feed a
+    * LITERAL bucket filter, so the index scan lists and reads only the
+    * query tokens' FILES (PlanContractSpec asserts the PartitionFilters);
+    * ranking is the identical [[operators.TextOps.postingsOverlapTopN]]
+    * kernel the computed path runs — indexed ≡ computed by construction
     * (PostingsIndexSpec gates the equality live). */
   private def postingsIndexedTopN(s: SparkSession, d: String,
                                   n: Int): DataFrame = {
@@ -3119,14 +3082,14 @@ object Queries {
     val qp = operators.TextOps.docPostings(
         Tables.documents(s, d).filter(col("doc_id") < 5), "doc_id", "text")
       .select(col("doc_id").as("query_id"), col("tok"))
-    // query-set identity = the canonicalized plan of the query postings
-    // frame (carries the predicate literals and scan roots)
-    val qpSig = Integer.toHexString(scala.util.hashing.MurmurHash3
-      .stringHash(qp.queryExecution.analyzed.canonicalized.toString))
-    val buckets: Seq[Long] = queryBucketsCache.getOrElseUpdate((idxDir, qpSig),
+    // probe-planning memo: one bucket list per (index dir, query-set
+    // frame). The staged index dir is immutable, and a regenerated input
+    // lands at a new dir through its fingerprint.
+    val buckets: Seq[Long] = Tables.memo("postings-buckets:" + idxDir, qp) {
       qp.select(operators.TextOps.postingsBucket(col("tok"),
           PostingsBuckets).as("bucket"))
-        .distinct().collect().map(_.getLong(0)).toSeq.sorted)
+        .distinct().collect().map(_.getLong(0)).toSeq.sorted
+    }
     val index = s.read.parquet(idxDir + "/postings")
       .filter(col("bucket").isin(buckets: _*))
       .select("doc_id", "tok")
@@ -3542,10 +3505,9 @@ object Queries {
     * hashes the streaming run. */
   val qStreamVecIvf: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
-    streaming.Declared.withSrcKey(streaming.Declared.srcKeyFor("ivfIndexMaintain", d))(
-        streaming.Declared.ivfIndexMaintain(s, emb,
+    streaming.Declared.ivfIndexMaintain(s, emb,
         emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-        k = 10, nCentroids = 16, nProbe = 6, scratchDir("stream-ivf")))
+        k = 10, nCentroids = 16, nProbe = 6, scratchDir("stream-ivf"))
       .orderBy("query_id", "rank")
   }
 

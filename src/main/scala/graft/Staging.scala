@@ -17,7 +17,8 @@ package graft
   * (staging away a key's own gated semantics would hollow the slot).
   * Users: Queries' staged frames and warehouse fixtures, the text and
   * vector index stages, MultimodalOps' media stage, and the declared
-  * stream rigs' file sources (streaming.Declared under `withSrcKey`). */
+  * stream rigs' file sources (streaming.Declared, keyed per frame through
+  * [[Tables.memo]]). */
 private[graft] object Staging {
   /** Per-key memoized build: the lazy val gives one-build-per-holder
     * semantics under the HOLDER's monitor, so a slow Spark build never

@@ -13,7 +13,6 @@ object Verify {
       .config("spark.sql.streaming.checkpointFileManagerClass",
         "graft.streaming.LocalCheckpointFileManager")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // enable the GENERATED oracles (trained-artifact literals, e.g. the
     // IVF codebook) for this data dir before oracle_sql.json is serialized
     OracleSql.setTrainingContext(spark, sfDir)

@@ -344,8 +344,7 @@ object Engine {
     * that micro scale the interpreted rewrite is still faster: 628–835 ms
     * against 774–1107 ms of maintenance per compaction batch. No benchmark
     * workload compacts a table above the bound, so the code-generating
-    * side and the bound itself are measured only by these probes (ROADMAP
-    * item 3). */
+    * side and the bound itself are measured only by these probes. */
   private[core] val InterpretedRewriteBytes = 4L * 1024 * 1024
 
   /** What a micro-scale rewrite's [[graft.Sessions.child]] sets over the

@@ -30,76 +30,33 @@ object Declared {
 
   private val Dec = DecimalType(25, 6)
 
-  /** Opt-in JVM-lifetime reuse of constructed stream-source dirs. The file
-    * source is this harness's stand-in for an existing Kafka topic —
-    * rebuilding it on every run prices rig construction, not the streaming
-    * operator — so the declared-query wrappers (Queries.scala) scope a
-    * stable key naming (query, input dir) around the call and the source
-    * files stage ONCE per process through [[graft.Staging.dirFor]] and are
-    * reused by every later run; checkpoints and state dirs stay under the
-    * caller's fresh per-run scratch, so replay semantics are untouched.
-    * Default None (spec fixtures, ad-hoc inputs) builds fresh under the
-    * per-run dir exactly as before. Keys must uniquely name the source
-    * CONTENT — the wrappers embed the input dir and its fingerprint, so
-    * equal keys read equal bytes. */
-  private val srcCacheKey =
-    new ThreadLocal[Option[(String, java.util.concurrent.atomic.AtomicInteger)]] {
-      override def initialValue(): Option[(String, java.util.concurrent.atomic.AtomicInteger)] = None
-    }
-  def withSrcKey[T](key: String)(body: => T): T = {
-    // per-scope call counter: a wrapper that builds SEVERAL sources (the
-    // two-sided joins) gets a distinct sub-key per build, in the fn's own
-    // deterministic call order
-    srcCacheKey.set(Some((key, new java.util.concurrent.atomic.AtomicInteger(0))))
-    try body finally srcCacheKey.remove()
-  }
+  /** Stream sources stage ONCE per process through [[graft.Staging.dirFor]]:
+    * the file source is this harness's stand-in for an existing Kafka
+    * topic, and rebuilding it on every run would price rig construction,
+    * not the streaming operator. Checkpoints and state dirs stay under the
+    * caller's per-run dir, so replay semantics are untouched. The key is
+    * the frame itself: [[graft.Tables.memo]] maps each distinct frame
+    * (exact canonicalized plan, in-memory rows included, plus its scanned
+    * files' fingerprint) to one fresh id, and the layout joins those ids.
+    * An equal frame over unchanged files reads equal staged bytes; a new
+    * literal, new rows or a file rewritten in place stage anew. */
+  private val frameIds = new java.util.concurrent.atomic.AtomicLong()
+  private def frameId(df: DataFrame): String =
+    graft.Tables.memo("stream-src", df)(s"f${frameIds.incrementAndGet()}")
 
-  /** Staging key for a (query, input-dir) pair. Inputs regenerated in place
-    * (same path, new bytes — the r9 ts-layout swap) change the recursive
-    * (path, size, mtime) [[graft.Staging.fingerprint]], so the source
-    * re-stages instead of serving a stale layout. */
-  def srcKeyFor(tag: String, inputDir: String): String =
-    tag + ":" + inputDir + ":" + graft.Staging.fingerprint(Seq(inputDir))
-  private def nextSrcKey(suffix: String): Option[String] =
-    srcCacheKey.get().map { case (k, c) => s"$k#${c.getAndIncrement()}$suffix" }
-
-  /** Construction-logic fingerprint of a source input: the canonicalized
-    * plan string carries the slice literals, projections, and scan roots
-    * the wrapper used to build it, so two builds under one scope that
-    * differ in construction (a new filter bound, a changed envelope shape)
-    * never share a staged dir. (The input-dir fingerprint in [[srcKeyFor]]
-    * covers data regeneration; this covers code.) */
-  private def planSig(dfs: Seq[DataFrame]): String =
-    Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(
-      dfs.map(df => df.queryExecution.analyzed.canonicalized.toString +
-        df.schema.catalogString).mkString("|")))
-
-  /** Source dir built by `build`: staged once per key under a scoped
-    * [[withSrcKey]], otherwise built fresh at `dir`/src. */
-  private def srcDir(suffix: String, dir: String)(build: String => Unit): String =
-    nextSrcKey(suffix) match {
-      case Some(k) => graft.Staging.dirFor(k, "graft-stream-src")(build)
-      case None =>
-        val src = dir + "/src"
-        build(src)
-        src
-    }
-
-  /** Write `df` as `nFiles` parquet files under `dir`/src; returns the
-    * src path. Split from the reader so multi-reader queries (the
-    * stream-stream joins) and static-side reads share one layout. With a
-    * scoped [[withSrcKey]], the layout builds once and is reused. */
-  private def writeSrc(df: DataFrame, dir: String, nFiles: Int): String =
-    srcDir(s"|w$nFiles|${planSig(Seq(df))}", dir) { d =>
+  /** Staged dir holding `df` as `nFiles` parquet files. Split from the
+    * reader so multi-reader queries (the stream-stream joins) and
+    * static-side reads share one layout. */
+  private[streaming] def writeSrc(df: DataFrame, nFiles: Int): String =
+    graft.Staging.dirFor(s"w$nFiles:${frameId(df)}", "graft-stream-src") { d =>
       df.repartition(nFiles).write.mode("overwrite").parquet(d)
     }
 
   /** Schema of the parquet files under a constructed source dir — one
     * footer-read DRIVER JOB per distinct dir per process instead of one
     * per stream open (every declared streaming key paid it each bench
-    * run). Sound: staged dirs are immutable once built, and per-run
-    * scratch dirs are only ever rebuilt by the same deterministic
-    * construction (equal path ⇒ equal schema within a process). */
+    * run). Sound: staged dirs are immutable once built, and a rebuild
+    * of a vanished one lands at a fresh path. */
   private val srcSchemaCache =
     scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
   private def srcSchema(s: SparkSession, src: String): org.apache.spark.sql.types.StructType =
@@ -123,7 +80,7 @@ object Declared {
 
   /** Alternating parquet state dirs for the foreachBatch fold rigs.
     * Generation = the framework batchId (the restart/replay discipline —
-    * see the incrementalClusters scaladoc). Two per-micro-batch driver
+    * see [[runFold]]). Two per-micro-batch driver
     * round trips are shaved off the naive read/write pair:
     *  - writes land as ONE file (`coalesce(1)`): fold states are bounded
     *    by construction (sketches, per-key LWW winners, moment vectors),
@@ -157,13 +114,18 @@ object Declared {
   }
 
   /** Shared scaffold of the foreachBatch FOLD rigs (heavy-hitters, drift,
-    * trend, LWW serve, and the three standing-index maintenances): one
-    * file-source stream over `src` at one file per trigger, AvailableNow,
-    * each micro-batch folded onto the previous [[FoldState]] generation
-    * (batchId-keyed — the restart/replay discipline: a replayed batch
-    * re-folds onto the RIGHT previous state and rewrites the same
-    * generation, so folds must be replay-idempotent, which every caller's
-    * fold is by construction: per-row transforms + associative merges).
+    * trend, LWW serve, dedup clusters, SCD2, and the standing-index
+    * maintenances): one file-source stream over `src` at one file per
+    * trigger, AvailableNow, each micro-batch folded onto the previous
+    * [[FoldState]] generation. Generation = the BATCH ID the framework
+    * hands foreachBatch, not a local counter — the restart/replay
+    * discipline: on a checkpoint restart the source skips committed
+    * batches but batchId keeps counting, so batch N always folds onto
+    * state N−1 (a local counter would reset to 0 and silently rebootstrap
+    * from empty), and a replayed batch re-folds onto the RIGHT previous
+    * state and rewrites the same generation. Folds must be
+    * replay-idempotent, which every caller's fold is by construction:
+    * per-row transforms + associative merges.
     * `fold(prev, batch)` gets None for batch 0. Returns the final state
     * read on the CALLER's session `s` (cross-session frames must not mix
     * in one plan), or None if the source produced no micro-batches. */
@@ -206,24 +168,22 @@ object Declared {
       .option("maxFilesPerTrigger", filesPerTrigger)
       .parquet(src)
 
-  /** Split `df` into `nFiles` parquet files under `dir`/src and open a
-    * file-source stream over them, `filesPerTrigger` per micro-batch. */
-  private def fileStream(s: SparkSession, df: DataFrame, dir: String,
-                         nFiles: Int, filesPerTrigger: Int): DataFrame =
-    srcReader(s, writeSrc(df, dir, nFiles), filesPerTrigger)
+  /** Stage `df` as `nFiles` parquet files and open a file-source stream
+    * over them, `filesPerTrigger` per micro-batch. */
+  private def fileStream(s: SparkSession, df: DataFrame, nFiles: Int,
+                         filesPerTrigger: Int): DataFrame =
+    srcReader(s, writeSrc(df, nFiles), filesPerTrigger)
 
-  /** Write `parts` as ONE parquet file each under `dir`/src with strictly
-    * increasing modification times: the file source orders files by mtime,
-    * so with `maxFilesPerTrigger=1` part i IS micro-batch i — the
-    * deterministic arrival order the event-time declared queries (session
-    * close, late-drop) are constructed around. */
-  private def orderedFileStream(s: SparkSession, parts: Seq[DataFrame],
-                                dir: String): DataFrame = {
-    def buildInto(src: String): Unit = {
+  /** Staged dir holding `parts` as ONE parquet file each, with strictly
+    * increasing modification times: the file source orders files by
+    * mtime, so read with `maxFilesPerTrigger=1` part i IS micro-batch i —
+    * the deterministic arrival order the event-time declared queries
+    * (session close, late-drop) are constructed around. */
+  private def orderedSrc(s: SparkSession, parts: Seq[DataFrame]): String =
+    graft.Staging.dirFor(s"o:${parts.map(frameId).mkString(",")}",
+        "graft-stream-src") { src =>
       val srcPath = new org.apache.hadoop.fs.Path(src)
       val fs = srcPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(srcPath, true)
-      fs.mkdirs(srcPath)
       parts.zipWithIndex.foreach { case (df, i) =>
         val tmp = new org.apache.hadoop.fs.Path(src + s"/_tmp$i")
         df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -235,12 +195,6 @@ object Declared {
         fs.setTimes(dest, 1700000000000L + i * 60000L, -1)
       }
     }
-    val src = srcDir(s"|o${parts.size}|${planSig(parts)}", dir)(buildInto)
-    s.readStream
-      .schema(srcSchema(s, src))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-  }
 
   /** Streaming tumbling-window count+sum via appended per-batch partials. */
   def tumblingAgg(s: SparkSession, events: DataFrame, dir: String): DataFrame = {
@@ -249,7 +203,7 @@ object Declared {
     // appends; each extra batch is ~0.3s of trigger overhead
     val stream = fileStream(s,
       events.select("event_id", "ts", "event_type", "value"),
-      dir, nFiles = 3, filesPerTrigger = 1)
+      nFiles = 3, filesPerTrigger = 1)
     stream.writeStream
       .queryName(uniqueName("graft-stream-tumbling"))
       .option("checkpointLocation", dir + "/ckpt")
@@ -302,7 +256,7 @@ object Declared {
   def slidingAgg(s: SparkSession, events: DataFrame, dir: String): DataFrame = {
     val out = dir + "/out"
     val ev = events.select(col("ts"), col("event_type"))
-    val (s8, stream) = orderedHalvesStream(s, ev, dir,
+    val (s8, stream) = orderedHalvesStream(s, ev,
         trailersRideLastFile = true) { (s8, _, hi) =>
       import s8.implicits._
       def sentinel(days: Long) =
@@ -344,7 +298,7 @@ object Declared {
     // the second batch either way, and each extra batch pays a full
     // state-store commit across every shuffle partition
     fileStream(s8, events.select("user_id", "event_type"),
-        dir, nFiles = 2, filesPerTrigger = 1)
+        nFiles = 2, filesPerTrigger = 1)
       .dropDuplicates("user_id", "event_type")
       .writeStream
       .queryName(uniqueName("graft-stream-dedup"))
@@ -374,7 +328,7 @@ object Declared {
     // ts rides along as the watermark column; the projection back to the
     // key pair happens AFTER the stateful dedup
     fileStream(s8, events.select("user_id", "event_type", "ts"),
-        dir, nFiles = 2, filesPerTrigger = 1)
+        nFiles = 2, filesPerTrigger = 1)
       .withWatermark("ts", "3650 days")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select("user_id", "event_type")
@@ -409,7 +363,7 @@ object Declared {
     // shape's — and the user_id key space is small
     val s8 = sized(s, 4)
     val src = writeSrc(
-      events.select("event_id", "user_id", "event_type", "ts"), dir, 2)
+      events.select("event_id", "user_id", "event_type", "ts"), 2)
     // two READERS, not one: each side tracks its own file progress, so the
     // join's state machine sees genuinely independent micro-batches
     def side(tpe: String, uAlias: String, idAlias: String, tsAlias: String) =
@@ -447,7 +401,7 @@ object Declared {
                        dir: String): DataFrame = {
     val out = dir + "/out"
     val s8 = sized(s, 8)
-    val src = writeSrc(events.select("event_id", "user_id", "ts"), dir, 2)
+    val src = writeSrc(events.select("event_id", "user_id", "ts"), 2)
     val stream = srcReader(s8, src, filesPerTrigger = 1)
     val profile = s8.read.parquet(src)
       .groupBy("user_id")
@@ -501,8 +455,8 @@ object Declared {
     val ev = events.select("event_id", "user_id", "event_type", "ts")
     val (_, hi, cut) = tsMidpoint(ev)
     import s8.implicits._
-    def side(tpe: String, uAlias: String, idAlias: String, tsAlias: String,
-             sub: String): DataFrame = {
+    def side(tpe: String, uAlias: String, idAlias: String,
+             tsAlias: String): DataFrame = {
       val sd = ev.filter(col("event_type") === tpe)
         .select(col("user_id"), col("event_id"), col("ts"))
       def sentinel(id: Long, days: Long) =
@@ -514,15 +468,14 @@ object Declared {
       // to advance the side's watermark at end-of-stream, so it doesn't
       // need its own trigger — one fewer join-state commit cycle per side
       val halves = orderedHalves(sd, cut)
-      orderedFileStream(s8,
-        Seq(halves.head, halves.last.unionByName(sentinel(-1L, 30))),
-        dir + sub)
+      srcReader(s8, orderedSrc(s8,
+        Seq(halves.head, halves.last.unionByName(sentinel(-1L, 30)))), 1)
         .select(col("user_id").as(uAlias), col("event_id").as(idAlias),
           col("ts").as(tsAlias))
         .withWatermark(tsAlias, "1 day")
     }
-    side("click", "c_user", "click_id", "click_ts", "/clicks")
-      .join(side("purchase", "b_user", "buy_id", "buy_ts", "/buys"),
+    side("click", "c_user", "click_id", "click_ts")
+      .join(side("purchase", "b_user", "buy_id", "buy_ts"),
         col("c_user") === col("b_user") &&
         col("buy_ts") >= col("click_ts") &&
         col("buy_ts") <= col("click_ts") + expr("INTERVAL 24 HOURS"),
@@ -555,8 +508,8 @@ object Declared {
     val ev = events.select("event_id", "user_id", "event_type", "ts")
     val (_, hi, cut) = tsMidpoint(ev)
     import s8.implicits._
-    def side(tpe: String, uAlias: String, idAlias: String, tsAlias: String,
-             sub: String): DataFrame = {
+    def side(tpe: String, uAlias: String, idAlias: String,
+             tsAlias: String): DataFrame = {
       val sd = ev.filter(col("event_type") === tpe)
         .select(col("user_id"), col("event_id"), col("ts"))
       def sentinel(id: Long, days: Long) =
@@ -564,15 +517,14 @@ object Declared {
           hi.getTime + days * 24 * 3600 * 1000)))
           .toDF("user_id", "event_id", "ts")
       val halves = orderedHalves(sd, cut)
-      orderedFileStream(s8,
-        Seq(halves.head, halves.last.unionByName(sentinel(-1L, 30))),
-        dir + sub)
+      srcReader(s8, orderedSrc(s8,
+        Seq(halves.head, halves.last.unionByName(sentinel(-1L, 30)))), 1)
         .select(col("user_id").as(uAlias), col("event_id").as(idAlias),
           col("ts").as(tsAlias))
         .withWatermark(tsAlias, "1 day")
     }
-    side("click", "c_user", "click_id", "click_ts", "/clicks")
-      .join(side("purchase", "b_user", "buy_id", "buy_ts", "/buys"),
+    side("click", "c_user", "click_id", "click_ts")
+      .join(side("purchase", "b_user", "buy_id", "buy_ts"),
         col("c_user") === col("b_user") &&
         col("buy_ts") >= col("click_ts") &&
         col("buy_ts") <= col("click_ts") + expr("INTERVAL 24 HOURS"),
@@ -615,7 +567,7 @@ object Declared {
     * ordered stream on an isolated 8-partition child session (state
     * sizing, same as dedupKeys). The trailer builder receives the child
     * session (for its implicits) and the corpus (lo, hi) timestamps. */
-  private def orderedHalvesStream(s: SparkSession, ev: DataFrame, dir: String,
+  private def orderedHalvesStream(s: SparkSession, ev: DataFrame,
       trailersRideLastFile: Boolean = false)
       (mkTrailers: (SparkSession, java.sql.Timestamp,
                     java.sql.Timestamp) => Seq[DataFrame])
@@ -640,8 +592,7 @@ object Declared {
         Seq(halves.head,
           trailers.foldLeft(halves.last)((h, t) => h.unionByName(t)))
       else halves ++ trailers
-    val stream = orderedFileStream(s8, files, dir)
-    (s8, stream)
+    (s8, srcReader(s8, orderedSrc(s8, files), 1))
   }
 
   /** LATE-DATA DROP under the oracle gate: the watermark's actual
@@ -657,13 +608,13 @@ object Declared {
     * assertion. The 3650-day delay spans the corpus, so no real key is
     * ever late or evicted (the q_stream_dedup_watermark argument) and the
     * real output is exactly the distinct key set. File order is
-    * deterministic ([[orderedFileStream]] mtimes + maxFilesPerTrigger=1),
+    * deterministic ([[orderedSrc]] mtimes + maxFilesPerTrigger=1),
     * so no batch-invariance argument is needed — the drop itself is the
     * test. */
   def dedupDropLate(s: SparkSession, events: DataFrame, dir: String): DataFrame = {
     val out = dir + "/out"
     val ev = events.select(col("user_id"), col("event_type"), col("ts"))
-    val (_, stream) = orderedHalvesStream(s, ev, dir) { (s8, _, hi) =>
+    val (_, stream) = orderedHalvesStream(s, ev) { (s8, _, hi) =>
       // watermark when the planted file arrives = max(real) − 3650 d; the
       // planted time must sit below it: hi − 3800 d does (corpus spans days)
       val planted = new java.sql.Timestamp(hi.getTime - 3800L * 24 * 3600 * 1000)
@@ -709,7 +660,7 @@ object Declared {
     val out = dir + "/out"
     val gapUs = gapMinutes * 60L * 1000000L
     val ev = events.select(col("user_id"), col("ts"))
-    val (s8, stream) = orderedHalvesStream(s, ev, dir,
+    val (s8, stream) = orderedHalvesStream(s, ev,
         trailersRideLastFile = true) { (s8, _, hi) =>
       // sentinel: past every possible timeout (hi + gap) PLUS the watermark
       // delay, with margin — its arrival pushes the watermark beyond every
@@ -755,7 +706,7 @@ object Declared {
       dir: String, serveType: String)(
       start: (graft.core.Engine.Handle, DataFrame, String) => StreamingQuery)
       : DataFrame = {
-    val src = writeSrc(envelopes, dir, nFiles = 2)
+    val src = writeSrc(envelopes, nFiles = 2)
     val stream = srcReader(s, src, filesPerTrigger = 1)
     val h = graft.core.Engine.bootstrap(s, dir + "/wh",
       overrideWarehouse = true)
@@ -770,7 +721,7 @@ object Declared {
 
   /** MID-STREAM SCHEMA EVOLUTION through the consumer→engine loop: each
     * element of `parts` arrives as its own micro-batch IN ORDER
-    * ([[orderedFileStream]] — all parts share the envelope's one-string
+    * ([[orderedSrc]] — all parts share the envelope's one-string
     * schema; the schema difference lives inside the JSON payloads), so a
     * field first seen in a later batch makes the registry evolve add-only
     * BETWEEN micro-batches (the reference consumer's reload-after-change,
@@ -781,7 +732,7 @@ object Declared {
     * which is what lets a plain-SQL oracle hash the evolving run. */
   def engineIngestEvolving(s: SparkSession, parts: Seq[DataFrame],
                            dir: String, serveType: String): DataFrame = {
-    val stream = orderedFileStream(s, parts, dir)
+    val stream = srcReader(s, orderedSrc(s, parts), 1)
     val h = graft.core.Engine.bootstrap(s, dir + "/wh",
       overrideWarehouse = true)
     StreamingIngest.start(h, stream, dir + "/ckpt").awaitTermination()
@@ -823,40 +774,16 @@ object Declared {
     // — the property under test; every extra batch pays a full CC round +
     // state rewrite (~0.6 s at sf0.1, A/B-measured) for no additional
     // coverage (GraphOpsSpec drives 4-batch folds vs union-find truth)
-    val stream = fileStream(s,
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst")),
-      dir, nFiles = 2, filesPerTrigger = 1)
-    // alternating state dirs, same reason as lwwServe: a parquet read
-    // cannot overwrite its own input files. Generation = the BATCH ID the
-    // framework hands foreachBatch, not a local counter: on a checkpoint
-    // restart (or an at-least-once batch replay) the source skips committed
-    // batches but batchId keeps counting, so batch N always folds onto
-    // state N−1 — a local counter would reset to 0 and silently rebootstrap
-    // the labeling from empty, dropping every earlier edge. Replaying batch
-    // N is idempotent: it rewrites state N%2 from the same prev + same rows.
-    val fs = new FoldState(dir)
-    val lastBatch = new java.util.concurrent.atomic.AtomicLong(-1L)
-    stream.writeStream
-      .queryName(uniqueName("graft-stream-cc"))
-      .option("checkpointLocation", dir + "/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev =
-          if (batchId == 0L) s.createDataFrame(java.util.List.of[Row](),
-            StructType(Seq(StructField("id", LongType),
-              StructField("component", LongType))))
-          else fs.read(s, batchId - 1)
-        fs.write(
-          graft.operators.GraphOps.incrementalComponents(prev, batch), batchId)
-        lastBatch.updateAndGet(m => math.max(m, batchId))
-        ()
-      }
-      .start().awaitTermination()
-    val labels =
-      if (lastBatch.get() < 0L) s.createDataFrame(java.util.List.of[Row](),
-        StructType(Seq(StructField("id", LongType),
-          StructField("component", LongType))))
-      else fs.read(s, lastBatch.get())
+    val noLabels = s.createDataFrame(java.util.List.of[Row](),
+      StructType(Seq(StructField("id", LongType),
+        StructField("component", LongType))))
+    val src = writeSrc(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst")), nFiles = 2)
+    // runs on the caller's session: batch 0 folds onto the empty labeling
+    val labels = runFold(s, s, src, dir, "graft-stream-cc") { (prev, batch) =>
+      graft.operators.GraphOps.incrementalComponents(
+        prev.getOrElse(noLabels), batch)
+    }.getOrElse(noLabels)
     graft.operators.GraphOps.labelWithClusters(docs, idCol, labels)
   }
 
@@ -876,7 +803,7 @@ object Declared {
     val s4 = sized(s, 4)
     val src = writeSrc(
       events.select("event_id", "ts", "user_id", "event_type", "value"),
-      dir, nFiles = 2)
+      nFiles = 2)
     // LWW's max-by-(ts,id) makes the replayed rewrite idempotent (the
     // runFold replay discipline)
     runFold(s4, s, src, dir, "graft-stream-lww") { (prev, batch) =>
@@ -899,7 +826,7 @@ object Declared {
     * [[graft.operators.HeavyHitters.mergeStates]]), so the candidate
     * superset survives streaming and the OUTPUT EQUALS batch exact heavy
     * hitters — q_agg_heavy_hitters' oracle hashes the streaming run.
-    * Alternating state dirs + batchId generation, as incrementalClusters. */
+    * Alternating state dirs + batchId generation ([[runFold]]). */
   def heavyHittersMaintain(s: SparkSession, docs: DataFrame,
                            textCol: String, k: Int, dir: String): DataFrame = {
     import graft.operators.HeavyHitters
@@ -909,7 +836,7 @@ object Declared {
     // stateless fold: 4 shuffle partitions (the changesMaintain knob,
     // A/B'd per key r11; sketch states are <=4k rows)
     val s4 = sized(s, 4)
-    val src = writeSrc(docs, dir, nFiles = 2)
+    val src = writeSrc(docs, nFiles = 2)
     val state = runFold(s4, s, src, dir, "graft-stream-heavy-hitters") {
       (prev, batch) =>
         val bs = HeavyHitters.sketchState(words(batch), "word", k)
@@ -948,7 +875,7 @@ object Declared {
     // stateless fold: 4 shuffle partitions (the changesMaintain knob,
     // A/B'd per key r11; per-batch signature rows are bounded by the slice)
     val s4 = sized(s, 4)
-    val src = writeSrc(docs.select(col(idCol), col(textCol)), dir, nFiles = 2)
+    val src = writeSrc(docs.select(col(idCol), col(textCol)), nFiles = 2)
     runFold(s4, s, src, dir, "graft-stream-minhash") { (prev, batch) =>
       val bs = DedupOps.minhashFixedSignatures(batch, idCol, textCol, k,
         bands * rowsPerBand)
@@ -1011,7 +938,7 @@ object Declared {
     // per-batch state rows are bounded by the arriving slice)
     val s4 = sized(s, 4)
     val src = writeSrc(docs.select(col("doc_id"), col("text"),
-      col("n_chars")), dir, nFiles = 2)
+      col("n_chars")), nFiles = 2)
     val state = runFold(s4, s, src, dir, "graft-stream-pipeline") {
       (prev, batch) =>
         val qual = TextOps.qualityMetrics(batch)
@@ -1068,7 +995,7 @@ object Declared {
     // stateless fold: 4 shuffle partitions (the changesMaintain knob;
     // per-batch index rows are bounded by the arriving slice)
     val s4 = sized(s, 4)
-    val src = writeSrc(emb.select(col(idCol), col(vecCol)), dir, nFiles = 2)
+    val src = writeSrc(emb.select(col(idCol), col(vecCol)), nFiles = 2)
     val index = runFold(s4, s, src, dir, "graft-stream-ivf") { (prev, batch) =>
       val bs = VectorOps.ivfEncode(batch, idCol, vecCol, cents)
       prev.fold(bs)(_.unionByName(bs))
@@ -1110,9 +1037,8 @@ object Declared {
       nCentroids, iters = 1)
     // stateless folds: 4 shuffle partitions (the changesMaintain knob)
     val s4 = sized(s, 4)
-    // source layouts build on the CALLER thread (writeSrc's srcCacheKey is
-    // a ThreadLocal), then the two INDEPENDENT folds run CONCURRENTLY
-    // (guide §2.6 — overlap independent jobs): each is its own
+    // the two INDEPENDENT folds run CONCURRENTLY (guide §2.6 — overlap
+    // independent jobs): each is its own
     // AvailableNow run over its own source, checkpoint, and FoldState
     // dirs, so one fold's per-micro-batch driver gaps (offset/commit log,
     // next-batch planning) back-fill with the other's work instead of
@@ -1120,10 +1046,8 @@ object Declared {
     // shared is mutated; both final states are identical to the
     // sequential run's, so the served output is unchanged (r21: the two
     // folds were ~0.9 s of the key's ~2.3 s, almost fully overlapped).
-    val docSrc = writeSrc(docs.select(col("doc_id"), col("text")),
-      dir + "/lex", nFiles = 2)
-    val embSrc = writeSrc(emb.select(col("vec_id"), col("embedding")),
-      dir + "/vec", nFiles = 2)
+    val docSrc = writeSrc(docs.select(col("doc_id"), col("text")), nFiles = 2)
+    val embSrc = writeSrc(emb.select(col("vec_id"), col("embedding")), nFiles = 2)
     import scala.concurrent.{Await, ExecutionContext, Future, blocking}
     import scala.concurrent.duration.Duration
     // dedicated 2-thread pool, not the global fork-join pool (ADVICE r21
@@ -1184,7 +1108,7 @@ object Declared {
                             dir: String): DataFrame = {
     import graft.operators.TextOps
     val s4 = sized(s, 4)
-    val src = writeSrc(docs.select(col(idCol), col(textCol)), dir, nFiles = 2)
+    val src = writeSrc(docs.select(col(idCol), col(textCol)), nFiles = 2)
     runFold(s4, s, src, dir, "graft-stream-textindex") { (prev, batch) =>
       val bs = TextOps.invertedIndex(batch, idCol, textCol, cap)
       prev.fold(bs)(_.unionByName(bs)
@@ -1211,7 +1135,7 @@ object Declared {
     // stateless fold: 4 shuffle partitions (the changesMaintain knob,
     // A/B'd per key r11; the state is O(groups x grid bins))
     val s4 = sized(s, 4)
-    val src = writeSrc(ev, dir, nFiles = 2)
+    val src = writeSrc(ev, nFiles = 2)
     def counts(df: DataFrame) =
       StatsOps.ksCounts(df, "event_type",
         dayofweek(col("ts")).isin(1, 7), "value", gridScale = 1000L)
@@ -1239,7 +1163,7 @@ object Declared {
     // stateless fold: 4 shuffle partitions (the changesMaintain knob,
     // A/B'd per key r11; the state is five moments per group)
     val s4 = sized(s, 4)
-    val src = writeSrc(ev, dir, nFiles = 2)
+    val src = writeSrc(ev, nFiles = 2)
     val state = runFold(s4, s, src, dir, "graft-stream-trend") {
       (prev, batch) =>
         val bs = StatsOps.olsCounts(batch, "event_type", "ts", "value")
@@ -1259,40 +1183,23 @@ object Declared {
     * come after its history — what a CDC log provides) holds by
     * construction here: the source is the two event-time-ordered halves.
     * Alternating state dirs + batchId-derived generation, same
-    * restart/replay reasoning as incrementalClusters above. Per batch the
+    * restart/replay reasoning as [[runFold]]. Per batch the
     * cost is one window over the batch + one key-join against state; the
     * full-state rewrite is the parquet-only stand-in for a merge-capable
     * sink where only touched keys would rewrite. */
   def scd2Maintain(s: SparkSession, events: DataFrame, dir: String): DataFrame = {
     val ev = events.select("user_id", "event_id", "event_type", "ts")
     val (_, _, cut) = tsMidpoint(ev)
-    val s8 = sized(s, 8)
-    val stream = orderedFileStream(s8, orderedHalves(ev, cut), dir)
-    val fs = new FoldState(dir)
-    val lastBatch = new java.util.concurrent.atomic.AtomicLong(-1L)
-    def fold(prev: DataFrame, batch: DataFrame): DataFrame =
-      graft.operators.Temporal.scd2Fold(prev, batch, keyCols = Seq("user_id"),
-        tsCol = "ts", orderCols = Seq("ts", "event_id"),
-        attrCols = Seq("event_type"))
-    stream.writeStream
-      .queryName(uniqueName("graft-stream-scd2"))
-      .option("checkpointLocation", dir + "/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev =
-          if (batchId == 0L) // zero-row bootstrap in the scd2 shape
-            graft.operators.Temporal.scd2(batch.limit(0), Seq("user_id"),
-              "ts", Seq("ts", "event_id"), Seq("event_type"))
-          else fs.read(s8, batchId - 1)
-        fs.write(fold(prev, batch), batchId)
-        lastBatch.updateAndGet(m => math.max(m, batchId))
-        ()
-      }
-      .start().awaitTermination()
-    if (lastBatch.get() < 0L)
-      graft.operators.Temporal.scd2(ev.limit(0), Seq("user_id"), "ts",
+    def history(df: DataFrame): DataFrame =
+      graft.operators.Temporal.scd2(df, Seq("user_id"), "ts",
         Seq("ts", "event_id"), Seq("event_type"))
-    else fs.read(s, lastBatch.get())
+    runFold(sized(s, 8), s, orderedSrc(s, orderedHalves(ev, cut)), dir,
+        "graft-stream-scd2") { (prev, batch) =>
+      // batch 0 folds onto a zero-row history in the scd2 shape
+      graft.operators.Temporal.scd2Fold(prev.getOrElse(history(batch.limit(0))),
+        batch, keyCols = Seq("user_id"), tsCol = "ts",
+        orderCols = Seq("ts", "event_id"), attrCols = Seq("event_type"))
+    }.getOrElse(history(ev.limit(0)))
   }
 
   /** Streaming CDC maintenance — the `table_changes` STREAM a downstream
@@ -1322,7 +1229,7 @@ object Declared {
     *
     * Idempotent under replay/restart: per-batch log dirs and the
     * batchId-parity state dirs are deterministic overwrites of the same
-    * paths (the incrementalClusters argument). At 100 TB the state
+    * paths (the [[runFold]] argument). At 100 TB the state
     * rewrite becomes a MERGE into a keyed table and the log an append —
     * the per-batch diff is one key-partitioned join either way. */
   def changesMaintain(s: SparkSession, events: DataFrame, dir: String): DataFrame =
@@ -1362,9 +1269,9 @@ object Declared {
     // NOT the stateful-family knob (sliding/session/scd2 keep 8, re-A/B'd
     // r9; their state stores size to shuffle.partitions, this doesn't)
     val s8 = sized(s, 4)
-    val stream = orderedFileStream(s8, Seq(
+    val stream = srcReader(s8, orderedSrc(s8, Seq(
       ev.filter(unix_micros(col("ts")) < cutUs),
-      ev.filter(unix_micros(col("ts")) >= cutUs)), dir)
+      ev.filter(unix_micros(col("ts")) >= cutUs))), 1)
     val fs = new FoldState(dir)
     val logDir = dir + "/changes"
     val lastBatch = new java.util.concurrent.atomic.AtomicLong(-1L)

@@ -25,7 +25,8 @@ import graft.sources.Codecs
   * Rows with an explicit `id` converge under the LWW read view, as
   * Cassandra upserts did for the reference. Rows whose `id` is generated
   * do not: a replay appends them again under fresh ids, and their
-  * quarantine rows twice (ROADMAP item 1).
+  * quarantine rows twice. A per-(stream, batchId, type) idempotent append
+  * would close this; none exists yet.
   */
 object StreamingIngest {
 
@@ -118,7 +119,8 @@ object StreamingIngest {
         // failing batch is logged and skipped, and its offsets still
         // commit, so it is never replayed: types that appended before the
         // failure keep their rows, and the failing type's rows are neither
-        // written nor quarantined (ROADMAP item 1)
+        // written nor quarantined, a known gap in the never-lose-a-row
+        // contract
         try {
           writer match {
             case Some(u) => h.ingestAs(u, grants.get, batch)

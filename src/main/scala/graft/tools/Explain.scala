@@ -13,7 +13,6 @@ object Explain {
         "q_topk_orderby_limit", "q_pred_range_time", "q_merge_into",
         "q_dedup_embedding", "q_pack_sequences", "q_sample_stratified")
     val spark = graft.Sessions.builder(8).appName("graft-explain").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     keys.foreach { k =>
       println(s"\n================ $k ================")
       graft.SparkEntry.queries(k)(spark, sfDir).explain("formatted")

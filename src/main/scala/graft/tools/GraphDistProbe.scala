@@ -30,7 +30,6 @@ object GraphDistProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.builder(cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     // serial probe ⇒ a global stage-completion sum attributes cleanly;
     // reset between operators

@@ -11,7 +11,6 @@ object IngestThroughput {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = graft.Sessions.builder(8).appName("graft-ingest-bench").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val n = graft.Tables.events(spark, sfDir).count()
     val wh = java.nio.file.Files.createTempDirectory("graft-tp-wh").toString
     val t0 = System.nanoTime()

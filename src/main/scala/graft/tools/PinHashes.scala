@@ -19,7 +19,6 @@ object PinHashes {
       .config("spark.sql.streaming.checkpointFileManagerClass",
         "graft.streaming.LocalCheckpointFileManager")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val rowsOnly =
       (graft.SparkEntry.queries.keySet -- graft.SparkEntry.oracleSql.keySet)
         .toSeq.sorted

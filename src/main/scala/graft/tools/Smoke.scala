@@ -5,7 +5,6 @@ package graft.tools
 object Smoke {
   def main(args: Array[String]): Unit = {
     val spark = graft.Sessions.builder(8).appName("graft-smoke").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val df = graft.SparkEntry.entry(spark)
     df.show(50, truncate = false)
     println(s"rows=${df.count()}")

@@ -382,19 +382,38 @@ class DeclaredSpec extends SparkSpec {
     assert(rows(streamed) == rows(batch))
   }
 
-  test("srcKeyFor: regenerated input files invalidate the source cache key") {
-    val dir = new java.io.File(tmpDir("graft-srckey"))
-    val f = new java.io.File(dir, "events.parquet")
-    java.nio.file.Files.write(f.toPath, "v1".getBytes)
-    f.setLastModified(1700000000000L)
-    val k1 = Declared.srcKeyFor("q_x", dir.toString)
-    assert(k1 === Declared.srcKeyFor("q_x", dir.toString)) // stable
-    assert(k1 !== Declared.srcKeyFor("q_y", dir.toString)) // per-query
-    // same path, new bytes (the r9 testdata-regeneration hazard): length
-    // or mtime change flips the fingerprint
-    java.nio.file.Files.write(f.toPath, "v2-longer".getBytes)
-    f.setLastModified(1700000001000L)
-    assert(k1 !== Declared.srcKeyFor("q_x", dir.toString))
+  test("stream sources stage per frame: literal, rows and rewritten files") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    // one parquet file at a fixed path, so a rewrite keeps the path and
+    // changes only its size and mtime
+    val input = new java.io.File(tmpDir("graft-srckey"), "data.parquet")
+    def putInput(n: Int, mult: Int, mtime: Long): Unit = {
+      val out = tmpDir("graft-srckey-out")
+      spark.range(n).selectExpr("id", s"id * $mult AS v").coalesce(1)
+        .write.mode("overwrite").parquet(out)
+      val part = new java.io.File(out).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.copy(part.toPath, input.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      assert(input.setLastModified(mtime))
+    }
+    def stage(df: DataFrame): String = Declared.writeSrc(df, nFiles = 2)
+    putInput(10, 2, 1700000000000L)
+    def below(n: Int) = spark.read.parquet(input.toString).filter(col("id") < n)
+    val first = stage(below(5))
+    assert(stage(below(5)) === first) // an equal frame reuses its dir
+    assert(stage(below(6)) !== first) // a new literal stages anew
+    // same path, new bytes: the re-read plan is equal, the files are not
+    putInput(20, 3, 1700000001000L)
+    val rewritten = stage(below(5))
+    assert(rewritten !== first)
+    assert(spark.read.parquet(rewritten).selectExpr("sum(v)").head.getLong(0) === 30L)
+    // in-memory rows are part of the key, as the dead-letter poison rows are
+    def local(rows: Seq[(Long, String)]) = rows.toDF("id", "message")
+    val poison = stage(local(Seq(1L -> "%%% not json", 2L -> "")))
+    assert(stage(local(Seq(1L -> "%%% not json", 2L -> ""))) === poison)
+    assert(stage(local(Seq(1L -> "%%% not json", 3L -> ""))) !== poison)
   }
 
   test("a keyed stream source stages once per JVM and writes no cross-JVM cache") {

@@ -40,7 +40,7 @@ class RestartRecoverySpec extends SparkSpec {
   /** Write `df` as ONE parquet file `b<idx>.parquet` under `srcDir` with a
     * pinned, idx-increasing mtime — the file source orders by mtime, so
     * with maxFilesPerTrigger=1 file idx IS micro-batch idx (the
-    * orderedFileStream convention in Declared). */
+    * orderedSrc convention in Declared). */
   private def addFile(df: DataFrame, srcDir: String, idx: Int): Unit = {
     val fs = new org.apache.hadoop.fs.Path(srcDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -43,7 +43,7 @@ class StreamStateGrowthSpec extends SparkSpec {
   }
 
   /** Write one parquet file per day with strictly increasing mtimes (the
-    * Declared.orderedFileStream construction) so `maxFilesPerTrigger=1`
+    * Declared.orderedSrc construction) so `maxFilesPerTrigger=1`
     * makes day i micro-batch i. */
   private def writeOrdered(days: Int, dir: String): String = {
     val src = dir + "/src"

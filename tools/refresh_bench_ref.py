@@ -95,28 +95,11 @@ def classify(full, anchor_mins, anchor_fp_matches=True):
     minsum = (sum(mins[k] for k in anchored)
               / sum(anchor_mins[k] for k in anchored) if anchored else 1.0)
     # jit_tail = POSITIONAL inflation: tail- vs head-quartile MEDIAN of
-    # the per-key min/anchor ratios in RUN order (sorted keys by default;
-    # the q_stream_* family hoists to the front for stream_first draws).
-    # Raw code-cache growth is NOT a signal — a fresh JVM grows its cache
-    # through the alphabet on quiet draws too (the decontaminated r19
-    # quiet draw: 66 -> 166 MB). Excluded from the series: keys whose
-    # surviving min came from an out-of-position re-measure — fresh-child
-    # samples (sample_source) and in-JVM salvage REPLACEMENTS (the
-    # *_replaced stamp lists); keys whose re-measure did not improve keep
-    # their in-position primary sample and stay in.
-    child = {k for k, v in full.get("sample_source", {}).items()
-             if v in ("child", "child_min_parent_median")}
-    restamped = (set(full.get("salvage_replaced", []))
-                 | set(full.get("ref_replaced", []))
-                 | set(full.get("median_rescue_replaced", []))
-                 | set(full.get("segment_replaced", []))
-                 | set(full.get("min_replaced", [])))
-    order = sorted(anchored)
-    if full.get("key_order") == "stream_first":
-        order = ([k for k in order if k.startswith("q_stream")]
-                 + [k for k in order if not k.startswith("q_stream")])
-    pos = [mins[k] / anchor_mins[k] for k in order
-           if k not in child and k not in restamped]
+    # the per-key min/anchor ratios in RUN order (graft.Bench runs keys
+    # sorted). Raw code-cache growth is NOT a signal — a fresh JVM grows
+    # its cache through the alphabet on quiet draws too (the
+    # decontaminated r19 quiet draw: 66 -> 166 MB).
+    pos = [mins[k] / anchor_mins[k] for k in sorted(anchored)]
     q = len(pos) // 4
 
     def med(s):

@@ -293,48 +293,6 @@ def test_quiet_regeneration_still_data_resets():
     assert out["queries_min"]["q_k216"] == 1.4  # wholesale reset happened
 
 
-def test_classifier_stream_first_run_order():
-    # a stream_first draw ran q_stream_* FIRST: the genuine tail
-    # inflation sits on the late-run keys; sorting the stream family
-    # into the middle would scramble the positional quartiles
-    par = (0.101, 0.102)
-    n = 217
-    keys = [f"q_k{i:03d}" for i in range(n)] + \
-        [f"q_stream_{i:02d}" for i in range(22)]
-    anchor = {k: 1.0 for k in keys}
-    run_order = ([k for k in sorted(keys) if k.startswith("q_stream")]
-                 + [k for k in sorted(keys) if not k.startswith("q_stream")])
-    mins = {k: (1.4 if i >= len(run_order) * 3 // 4 else 1.0)
-            for i, k in enumerate(run_order)}
-    full = {"cpus": "32", "calib_ref": 0.68,
-            "calib_before_sec": 0.738, "calib_after_sec": 0.747,
-            "calib_par_before_sec": par[0], "calib_par_after_sec": par[1],
-            "queries_min": mins, "key_order": "stream_first"}
-    assert tool.classify(full, anchor) == "jit_tail"
-
-
-def test_classifier_excludes_out_of_position_replacements():
-    # keys whose surviving min came from an out-of-position re-measure
-    # (child samples, in-JVM salvage replacements) must not flatten or
-    # fake the positional series: here 30 early-run keys carry REPLACED
-    # (end-of-sweep, inflated) mins — excluding them keeps the head
-    # median honest and the genuine tail visible
-    full, anchor = _synth(217, 0.0, 1.0, (0.101, 0.102), tail_ratio=1.3)
-    early = sorted(full["queries_min"])[:30]
-    for k in early:
-        full["queries_min"][k] = 1.35  # replaced late, inflated
-    full["salvage_replaced"] = early[:15]
-    full["min_replaced"] = early[15:]
-    assert tool.classify(full, anchor) == "jit_tail"
-    # without the exclusion lists the head median reads inflated too and
-    # the draw would pass as quiet — pin the counterfactual
-    full2, anchor2 = _synth(217, 0.0, 1.0, (0.101, 0.102), tail_ratio=1.3)
-    head = sorted(full2["queries_min"])[:30]
-    for k in head:
-        full2["queries_min"][k] = 1.35
-    assert tool.classify(full2, anchor2) == "quiet"
-
-
 # ---- hardware-epoch reset (r22) ----
 
 def test_epoch_reset_quiet_enters_wholesale():
