@@ -3381,7 +3381,7 @@ object Queries {
     * declared reader of the production index shape ([[qVecAnnIvfIndexed]],
     * [[qHybridRrf]]'s vector ranker).
     * key = training params + a layout version tag + the input fingerprint
-    * (the ensureEncoded codecTag / Declared planSig staleness doctrine):
+    * (the ensureEncoded codecTag staleness doctrine):
     * BUMP `enc-v1` whenever lloydCentroids or ivfEncode semantics change,
     * or a stale on-disk index would be served under the old key. */
   private def stagedIvfIndexDir(s: SparkSession, d: String): String =
