@@ -7,11 +7,12 @@ import org.apache.spark.sql.types._
 
 /** Vector similarity search over `array<float>` embedding columns.
   *
-  * Determinism: dot products accumulate in DECIMAL(38,18) (exact, associative
-  * — no float-order sensitivity), then convert to double for the final
-  * ratio. This makes results bit-identical across engines and partitionings,
-  * which the DuckDB-oracle hash check requires (SURVEY §7.5.3) — and is also
-  * the right call on a real cluster, where partition order is arbitrary.
+  * Determinism: dot products accumulate on a fixed-point grid ([[dotFixed]]:
+  * each product floored to 1e-13 and summed as a long — exact, associative,
+  * no float-order sensitivity), then convert to double for the final ratio.
+  * This makes results bit-identical across engines and partitionings, which
+  * the DuckDB-oracle hash check requires (SURVEY §7.5.3) — and is also the
+  * right call on a real cluster, where partition order is arbitrary.
   *
   * Scale notes: brute-force top-k broadcasts the (small) query set and scans
   * the corpus once — linear, and the per-group top-k uses a bounded heap via
@@ -23,18 +24,9 @@ object VectorOps {
 
   private val Dec = DecimalType(38, 18)
 
-  /** Exact decimal-accumulated dot product of two float-array columns. */
-  def dotDec(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
-      lit(java.math.BigDecimal.ZERO).cast(Dec),
-      // recast after +: Spark's coercion widens DECIMAL(38,18)+DECIMAL(38,18)
-      // to DECIMAL(38,17), which would break the accumulator type contract
-      (acc, x) => (acc + x.cast(Dec)).cast(Dec))
-
   /** Fixed-point dot product: each double product floored onto a 1e-13 grid
-    * and summed as longs. Exact and associative (partition-order immune)
-    * like the decimal path, identically computable in ANSI SQL
+    * and summed as longs. Exact and associative (partition-order immune),
+    * identically computable in ANSI SQL
     * (FLOOR/BIGINT), but runs on primitive long adds inside codegen instead
     * of boxed decimals. 64 terms × |p|≤~1e13 stays far below 2^53, so the
     * final long→double conversion is exact in both engines. */
@@ -44,16 +36,6 @@ object VectorOps {
         (x, y) => floor(x.cast(DoubleType) * y.cast(DoubleType) * lit(1e13))),
       lit(0L), (acc, x) => acc + x)
       .cast(DoubleType) / lit(1e13)
-
-  /** Cosine similarity, rounded to 6 dp. The decimal accumulation is exact
-    * WITHIN an engine (partition-order independent), but the double→decimal
-    * cast itself rounds differently across engines (shortest-string vs
-    * binary scaling, ~1e-16 drift over 64 terms) — so cross-engine
-    * determinism additionally needs the rounded output, and ranking must
-    * order by the ROUNDED value with an id tie-break. */
-  def cosine(a: Column, b: Column): Column =
-    round(dotDec(a, b).cast(DoubleType) /
-      (sqrt(dotDec(a, a).cast(DoubleType)) * sqrt(dotDec(b, b).cast(DoubleType))), 6)
 
   /** Brute-force cosine top-k: for every query vector (broadcast), rank the
     * corpus by cosine desc (tie-break id asc) and keep the top k. */

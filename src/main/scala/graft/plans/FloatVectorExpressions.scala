@@ -14,9 +14,10 @@ import org.apache.spark.sql.types._
   * formulation `aggregate(zip_with(a,b,*),0d,+)` allocates an intermediate
   * array and evaluates three lambda closures per row; this compiles to a
   * single fused primitive loop inside whole-stage codegen — the hot inner
-  * kernel of similarity search over 10⁸⁺ vectors. Used on the approximate
-  * (LSH/ANN) path; the oracle-exact path keeps decimal accumulation for
-  * cross-engine bit-stability.
+  * kernel of similarity search over 10⁸⁺ vectors. Used on the LSH/ANN
+  * paths (hyperplane signs, codebook and candidate scoring); brute-force
+  * cosine accumulates on [[graft.operators.VectorOps.dotFixed]]'s
+  * fixed-point grid instead.
   *
   * Accumulation is sequential in array order (both eval and codegen), so the
   * result is deterministic and partitioning-independent.
@@ -117,8 +118,4 @@ object FloatVectorExpressions {
 
   def norm(a: Column): Column =
     Bridge.column(FloatNorm(Bridge.expression(a)))
-
-  /** Fast double-path cosine (deterministic per-row; used on the ANN path). */
-  def cosineFast(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.round(dot(a, b) / (norm(a) * norm(b)), 6)
 }

@@ -1,17 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 /** Structured-Streaming implementations behind DECLARED (oracle-gated)
-  * queries: each runs a real `readStream → writeStream` job to completion
-  * with `Trigger.AvailableNow` over the test table split into several files
-  * (`maxFilesPerTrigger` forces multiple micro-batches), then returns the
-  * final result as a batch frame. The outputs are constructed to be
-  * micro-batch-boundary INVARIANT — equal to the one-shot batch query — so
-  * the DuckDB oracle checks streaming execution exactly:
+  * queries: each runs a real streaming job to completion through one
+  * runner ([[runStream]], `Trigger.AvailableNow`) over the test table
+  * split into several files (`maxFilesPerTrigger` forces multiple
+  * micro-batches), then returns the final result as a batch frame. The
+  * outputs are constructed to be micro-batch-boundary INVARIANT — equal to
+  * the one-shot batch query — so the DuckDB oracle checks streaming
+  * execution exactly:
   *
   *  - tumbling agg: per-batch PARTIAL aggregates (count + exact decimal
   *    sums) appended to the sink, merged by a final re-aggregation. Partials
@@ -69,8 +70,7 @@ object Declared {
     * key. The child follows the parent's other runtime settings. A call
     * changes the child's conf only when the parent's conf changed, so
     * concurrent runs on a shared child are safe: checkpoint dirs are
-    * per-run and query names are [[uniqueName]]-suffixed (an ACTIVE
-    * duplicate name on one session would otherwise refuse to start).
+    * per-run and queries carry no name to clash ([[runStream]]).
     * AQE stays on here: disabling it for the tiny per-batch folds was
     * measured slower (q_stream_changes 2.07–2.10 s vs 1.66–1.90 s warm),
     * as its runtime tiny-side broadcasts and post-shuffle coalesce outweigh
@@ -128,34 +128,47 @@ object Declared {
     * per-row transforms + associative merges.
     * `fold(prev, batch)` gets None for batch 0. Returns the final state
     * read on the CALLER's session `s` (cross-session frames must not mix
-    * in one plan), or None if the source produced no micro-batches. */
-  private def runFold(s4: SparkSession, s: SparkSession, src: String,
-                      dir: String, name: String)
+    * in one plan), or None if the source produced no micro-batches.
+    *
+    * The fold runs on a [[sized]] child of `width` shuffle partitions, or
+    * on `s` itself when `width` is None. The default of 4 suits a
+    * stateless fold: its per-batch work is one small merge onto bounded
+    * state, so 4 partitions beat the session default (A/B'd per key,
+    * r11). The stateful rigs size their state stores separately. */
+  private def runFold(s: SparkSession, src: String, dir: String,
+                      width: Option[Int] = Some(4))
                      (fold: (Option[DataFrame], DataFrame) => DataFrame): Option[DataFrame] = {
-    val stream = srcReader(s4, src, filesPerTrigger = 1)
+    val on = width.fold(s)(sized(s, _))
     val fs = new FoldState(dir)
     val lastBatch = new java.util.concurrent.atomic.AtomicLong(-1L)
-    stream.writeStream
-      .queryName(uniqueName(name))
-      .option("checkpointLocation", dir + "/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev = if (batchId == 0L) None else Some(fs.read(s4, batchId - 1))
+    runStream(srcReader(on, src, filesPerTrigger = 1), dir)(
+      _.foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val prev = if (batchId == 0L) None else Some(fs.read(on, batchId - 1))
         fs.write(fold(prev, batch), batchId)
         lastBatch.updateAndGet(m => math.max(m, batchId))
         ()
-      }
-      .start().awaitTermination()
+      })
     if (lastBatch.get() < 0L) None else Some(fs.read(s, lastBatch.get()))
   }
 
-  /** Monotonic suffix for streaming query names: a [[sized]] child is
-    * shared by every run of a rig on one parent, so two concurrent runs can
-    * share a StreamingQueryManager, where a duplicate ACTIVE query name
-    * refuses to start. */
-  private val qnCounter = new java.util.concurrent.atomic.AtomicLong()
-  private def uniqueName(base: String): String =
-    base + "-" + qnCounter.incrementAndGet()
+  /** The one way a rig runs its stream: checkpoint at `dir/ckpt`,
+    * `Trigger.AvailableNow`, started and awaited to completion; `sink`
+    * sets the rest of the writer. Queries carry no name: Spark refuses a
+    * second ACTIVE query of one name on a session, and concurrent runs of
+    * a rig share its [[sized]] child. */
+  private def runStream(df: DataFrame, dir: String)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
+    sink(df.writeStream
+      .option("checkpointLocation", dir + "/ckpt")
+      .trigger(Trigger.AvailableNow()))
+      .start().awaitTermination()
+
+  /** [[runStream]] into a parquet sink at `dir/out`, read back on the
+    * caller's session `s`. */
+  private def toParquet(s: SparkSession, df: DataFrame, dir: String): DataFrame = {
+    runStream(df, dir)(_.format("parquet").option("path", dir + "/out"))
+    s.read.parquet(dir + "/out")
+  }
 
   /** File-source stream over `src`, `filesPerTrigger` files per
     * micro-batch. The reader is built on `s` — pass an isolated child
@@ -204,11 +217,7 @@ object Declared {
     val stream = fileStream(s,
       events.select("event_id", "ts", "event_type", "value"),
       nFiles = 3, filesPerTrigger = 1)
-    stream.writeStream
-      .queryName(uniqueName("graft-stream-tumbling"))
-      .option("checkpointLocation", dir + "/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    runStream(stream, dir)(_.foreachBatch { (batch: DataFrame, _: Long) =>
         batch.groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"),
             sum(col("value").cast(Dec)).cast(Dec).as("sv"))
@@ -222,8 +231,7 @@ object Declared {
           .option(graft.core.Ingest.NoJobMarker._1, graft.core.Ingest.NoJobMarker._2)
           .parquet(out)
         ()
-      }
-      .start().awaitTermination()
+      })
     s.read.parquet(out)
       .groupBy("window_start", "window_end", "event_type")
       .agg(sum("n").as("n"), sum("sv").cast(DoubleType).as("sum_value"))
@@ -254,36 +262,26 @@ object Declared {
     * closes exactly once ⇒ the emitted set equals the batch sliding
     * aggregate and the q_window_sliding oracle hashes the run. */
   def slidingAgg(s: SparkSession, events: DataFrame, dir: String): DataFrame = {
-    val out = dir + "/out"
     val ev = events.select(col("ts"), col("event_type"))
-    val (s8, stream) = orderedHalvesStream(s, ev,
-        trailersRideLastFile = true) { (s8, _, hi) =>
-      import s8.implicits._
+    val (_, stream) = orderedHalvesStream(s, ev,
+        trailersRideLastFile = true) { (s4, _, hi) =>
+      import s4.implicits._
       def sentinel(days: Long) =
         Seq((new java.sql.Timestamp(hi.getTime + days * 24 * 3600 * 1000L),
           "wm_sentinel")).toDF("ts", "event_type")
       Seq(sentinel(30))
     }
-    stream
+    toParquet(s, stream
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"), col("event_type"), col("n"))
-      .writeStream
-      .queryName(uniqueName("graft-stream-sliding"))
-      .option("checkpointLocation", dir + "/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .format("parquet")
-      .option("path", out)
-      .start().awaitTermination()
-    s.read.parquet(out).filter(col("event_type") =!= "wm_sentinel")
+        col("window.end").as("window_end"), col("event_type"), col("n")), dir)
+      .filter(col("event_type") =!= "wm_sentinel")
   }
 
   /** Streaming exact dedup: keyed state keeps first occurrence per key. */
   def dedupKeys(s: SparkSession, events: DataFrame, dir: String): DataFrame = {
-    val out = dir + "/out"
     // pin the STATE partition count to 8 for the duration of the run: a
     // streaming query fixes its state layout from the conf at first start,
     // and per-partition store commits (delta file + maintenance) dominate
@@ -297,17 +295,9 @@ object Declared {
     // 2 micro-batches, not 4: the cross-batch keyed state is exercised by
     // the second batch either way, and each extra batch pays a full
     // state-store commit across every shuffle partition
-    fileStream(s8, events.select("user_id", "event_type"),
+    toParquet(s, fileStream(s8, events.select("user_id", "event_type"),
         nFiles = 2, filesPerTrigger = 1)
-      .dropDuplicates("user_id", "event_type")
-      .writeStream
-      .queryName(uniqueName("graft-stream-dedup"))
-      .option("checkpointLocation", dir + "/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", out)
-      .start().awaitTermination()
-    s.read.parquet(out)
+      .dropDuplicates("user_id", "event_type"), dir)
   }
 
   /** Streaming dedup with BOUNDED state — the production variant of
@@ -322,24 +312,15 @@ object Declared {
     * oracle hash-check the watermarked streaming execution exactly. */
   def dedupKeysWatermarked(s: SparkSession, events: DataFrame,
                            dir: String): DataFrame = {
-    val out = dir + "/out"
     // same isolated-session 8-partition state sizing as dedupKeys
     val s8 = sized(s, 8)
     // ts rides along as the watermark column; the projection back to the
     // key pair happens AFTER the stateful dedup
-    fileStream(s8, events.select("user_id", "event_type", "ts"),
+    toParquet(s, fileStream(s8, events.select("user_id", "event_type", "ts"),
         nFiles = 2, filesPerTrigger = 1)
       .withWatermark("ts", "3650 days")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
-      .select("user_id", "event_type")
-      .writeStream
-      .queryName(uniqueName("graft-stream-dedup-wm"))
-      .option("checkpointLocation", dir + "/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", out)
-      .start().awaitTermination()
-    s.read.parquet(out)
+      .select("user_id", "event_type"), dir)
   }
 
   /** Stream-STREAM inner join under the oracle gate — the last major
@@ -356,37 +337,28 @@ object Declared {
     * other side's watermark, which is the reason this shape stays bounded
     * on an unbounded stream. */
   def streamStreamJoin(s: SparkSession, events: DataFrame, dir: String): DataFrame = {
-    val out = dir + "/out"
     // 4, not 8: a stream-stream join commits FOUR state stores per
     // partition per batch (keyToNumValues + keyWithIndexToValue, each
     // side), so the fixed commit cost is double every other stateful
     // shape's — and the user_id key space is small
-    val s8 = sized(s, 4)
+    val s4 = sized(s, 4)
     val src = writeSrc(
       events.select("event_id", "user_id", "event_type", "ts"), 2)
     // two READERS, not one: each side tracks its own file progress, so the
     // join's state machine sees genuinely independent micro-batches
     def side(tpe: String, uAlias: String, idAlias: String, tsAlias: String) =
-      srcReader(s8, src, 1)
+      srcReader(s4, src, 1)
         .filter(col("event_type") === tpe)
         .select(col("user_id").as(uAlias), col("event_id").as(idAlias),
           col("ts").as(tsAlias))
         .withWatermark(tsAlias, "3650 days")
-    side("click", "c_user", "click_id", "click_ts")
+    toParquet(s, side("click", "c_user", "click_id", "click_ts")
       .join(side("purchase", "b_user", "buy_id", "buy_ts"),
         col("c_user") === col("b_user") &&
         col("buy_ts") >= col("click_ts") &&
         col("buy_ts") <= col("click_ts") + expr("INTERVAL 24 HOURS"))
       .select(col("c_user").as("user_id"), col("click_id"), col("click_ts"),
-        col("buy_id"), col("buy_ts"))
-      .writeStream
-      .queryName(uniqueName("graft-stream-stream-join"))
-      .option("checkpointLocation", dir + "/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", out)
-      .start().awaitTermination()
-    s.read.parquet(out)
+        col("buy_id"), col("buy_ts")), dir)
   }
 
   /** Stream-STATIC join — the per-event enrichment shape of a production
@@ -399,25 +371,16 @@ object Declared {
     * in one plan). */
   def streamStaticJoin(s: SparkSession, events: DataFrame,
                        dir: String): DataFrame = {
-    val out = dir + "/out"
     val s8 = sized(s, 8)
     val src = writeSrc(events.select("event_id", "user_id", "ts"), 2)
     val stream = srcReader(s8, src, filesPerTrigger = 1)
     val profile = s8.read.parquet(src)
       .groupBy("user_id")
       .agg(min("ts").as("first_ts"), count(lit(1)).as("n_events"))
-    stream.join(broadcast(profile), Seq("user_id"))
+    toParquet(s, stream.join(broadcast(profile), Seq("user_id"))
       .select(col("event_id"), col("user_id"), col("ts"),
         col("first_ts"), col("n_events"),
-        (col("ts") === col("first_ts")).as("is_first"))
-      .writeStream
-      .queryName(uniqueName("graft-stream-static-join"))
-      .option("checkpointLocation", dir + "/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", out)
-      .start().awaitTermination()
-    s.read.parquet(out)
+        (col("ts") === col("first_ts")).as("is_first")), dir)
   }
 
   /** Stream-stream LEFT OUTER join — the watermark/state-EVICTION path
@@ -447,14 +410,13 @@ object Declared {
     * set equals the batch LEFT join — the oracle. */
   def streamStreamJoinOuter(s: SparkSession, events: DataFrame,
                             dir: String): DataFrame = {
-    val out = dir + "/out"
     // 4 state partitions — same 4-stores-per-partition argument as the
     // inner variant; runs 2 micro-batches (sentinels ride the second
     // file) plus the watermark-applying no-data batch
-    val s8 = sized(s, 4)
+    val s4 = sized(s, 4)
     val ev = events.select("event_id", "user_id", "event_type", "ts")
     val (_, hi, cut) = tsMidpoint(ev)
-    import s8.implicits._
+    import s4.implicits._
     def side(tpe: String, uAlias: String, idAlias: String,
              tsAlias: String): DataFrame = {
       val sd = ev.filter(col("event_type") === tpe)
@@ -468,28 +430,21 @@ object Declared {
       // to advance the side's watermark at end-of-stream, so it doesn't
       // need its own trigger — one fewer join-state commit cycle per side
       val halves = orderedHalves(sd, cut)
-      srcReader(s8, orderedSrc(s8,
+      srcReader(s4, orderedSrc(s4,
         Seq(halves.head, halves.last.unionByName(sentinel(-1L, 30)))), 1)
         .select(col("user_id").as(uAlias), col("event_id").as(idAlias),
           col("ts").as(tsAlias))
         .withWatermark(tsAlias, "1 day")
     }
-    side("click", "c_user", "click_id", "click_ts")
+    toParquet(s, side("click", "c_user", "click_id", "click_ts")
       .join(side("purchase", "b_user", "buy_id", "buy_ts"),
         col("c_user") === col("b_user") &&
         col("buy_ts") >= col("click_ts") &&
         col("buy_ts") <= col("click_ts") + expr("INTERVAL 24 HOURS"),
         "left_outer")
       .select(col("c_user").as("user_id"), col("click_id"), col("click_ts"),
-        col("buy_id"), col("buy_ts"))
-      .writeStream
-      .queryName(uniqueName("graft-stream-stream-join-outer"))
-      .option("checkpointLocation", dir + "/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", out)
-      .start().awaitTermination()
-    s.read.parquet(out).filter(col("user_id") >= 0L)
+        col("buy_id"), col("buy_ts")), dir)
+      .filter(col("user_id") >= 0L)
   }
 
   /** Stream-stream FULL OUTER join — the third eviction shape: BOTH
@@ -503,11 +458,10 @@ object Declared {
     * columns, never as null). */
   def streamStreamJoinFull(s: SparkSession, events: DataFrame,
                            dir: String): DataFrame = {
-    val out = dir + "/out"
-    val s8 = sized(s, 4)
+    val s4 = sized(s, 4)
     val ev = events.select("event_id", "user_id", "event_type", "ts")
     val (_, hi, cut) = tsMidpoint(ev)
-    import s8.implicits._
+    import s4.implicits._
     def side(tpe: String, uAlias: String, idAlias: String,
              tsAlias: String): DataFrame = {
       val sd = ev.filter(col("event_type") === tpe)
@@ -517,28 +471,21 @@ object Declared {
           hi.getTime + days * 24 * 3600 * 1000)))
           .toDF("user_id", "event_id", "ts")
       val halves = orderedHalves(sd, cut)
-      srcReader(s8, orderedSrc(s8,
+      srcReader(s4, orderedSrc(s4,
         Seq(halves.head, halves.last.unionByName(sentinel(-1L, 30)))), 1)
         .select(col("user_id").as(uAlias), col("event_id").as(idAlias),
           col("ts").as(tsAlias))
         .withWatermark(tsAlias, "1 day")
     }
-    side("click", "c_user", "click_id", "click_ts")
+    toParquet(s, side("click", "c_user", "click_id", "click_ts")
       .join(side("purchase", "b_user", "buy_id", "buy_ts"),
         col("c_user") === col("b_user") &&
         col("buy_ts") >= col("click_ts") &&
         col("buy_ts") <= col("click_ts") + expr("INTERVAL 24 HOURS"),
         "full_outer")
       .select(coalesce(col("c_user"), col("b_user")).as("user_id"),
-        col("click_id"), col("click_ts"), col("buy_id"), col("buy_ts"))
-      .writeStream
-      .queryName(uniqueName("graft-stream-stream-join-full"))
-      .option("checkpointLocation", dir + "/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", out)
-      .start().awaitTermination()
-    s.read.parquet(out).filter(col("user_id") >= 0L)
+        col("click_id"), col("click_ts"), col("buy_id"), col("buy_ts")), dir)
+      .filter(col("user_id") >= 0L)
   }
 
   /** (min ts, max ts, midpoint) of an events slice, memoized per frame
@@ -564,8 +511,8 @@ object Declared {
     * midpoint of `ts` (one 1-row aggregate, metadata-scale collect;
     * cross-batch event-time order is the premise the watermark arguments
     * use), append `mkTrailer`'s planted row as the LAST file, and open the
-    * ordered stream on an isolated 8-partition child session (state
-    * sizing, same as dedupKeys). The trailer builder receives the child
+    * ordered stream on an isolated 4-partition child session (state
+    * sizing, see below). The trailer builder receives the child
     * session (for its implicits) and the corpus (lo, hi) timestamps. */
   private def orderedHalvesStream(s: SparkSession, ev: DataFrame,
       trailersRideLastFile: Boolean = false)
@@ -577,9 +524,9 @@ object Declared {
     // 1.6s vs 1.75s warm on q_stream_sliding — the manager removed the
     // per-store commit forks that once made 8 the r9 winner); results are
     // partition-count invariant (PartitionInvarianceSpec)
-    val s8 = sized(s, 4)
+    val s4 = sized(s, 4)
     val halves = orderedHalves(ev, cut)
-    val trailers = mkTrailers(s8, lo, hi)
+    val trailers = mkTrailers(s4, lo, hi)
     // A trailer whose ONLY job is to advance the watermark past every real
     // row at end-of-stream doesn't need its own trigger: as the LAST ROWS
     // OF THE LAST FILE it advances the watermark after the same batch, the
@@ -592,7 +539,7 @@ object Declared {
         Seq(halves.head,
           trailers.foldLeft(halves.last)((h, t) => h.unionByName(t)))
       else halves ++ trailers
-    (s8, srcReader(s8, orderedSrc(s8, files), 1))
+    (s4, srcReader(s4, orderedSrc(s4, files), 1))
   }
 
   /** LATE-DATA DROP under the oracle gate: the watermark's actual
@@ -612,28 +559,19 @@ object Declared {
     * so no batch-invariance argument is needed — the drop itself is the
     * test. */
   def dedupDropLate(s: SparkSession, events: DataFrame, dir: String): DataFrame = {
-    val out = dir + "/out"
     val ev = events.select(col("user_id"), col("event_type"), col("ts"))
-    val (_, stream) = orderedHalvesStream(s, ev) { (s8, _, hi) =>
+    val (_, stream) = orderedHalvesStream(s, ev) { (s4, _, hi) =>
       // watermark when the planted file arrives = max(real) − 3650 d; the
       // planted time must sit below it: hi − 3800 d does (corpus spans days)
       val planted = new java.sql.Timestamp(hi.getTime - 3800L * 24 * 3600 * 1000)
-      import s8.implicits._
+      import s4.implicits._
       Seq(Seq((-99L, "late_sentinel", planted))
         .toDF("user_id", "event_type", "ts"))
     }
-    stream
+    toParquet(s, stream
       .withWatermark("ts", "3650 days")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
-      .select("user_id", "event_type")
-      .writeStream
-      .queryName(uniqueName("graft-stream-late-drop"))
-      .option("checkpointLocation", dir + "/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", out)
-      .start().awaitTermination()
-    s.read.parquet(out)
+      .select("user_id", "event_type"), dir)
   }
 
   /** Streaming sessionization under the oracle gate — the last major
@@ -657,35 +595,26 @@ object Declared {
     * streaming run exactly. */
   def sessionWindows(s: SparkSession, events: DataFrame, dir: String,
                      gapMinutes: Int): DataFrame = {
-    val out = dir + "/out"
     val gapUs = gapMinutes * 60L * 1000000L
     val ev = events.select(col("user_id"), col("ts"))
-    val (s8, stream) = orderedHalvesStream(s, ev,
-        trailersRideLastFile = true) { (s8, _, hi) =>
+    val (s4, stream) = orderedHalvesStream(s, ev,
+        trailersRideLastFile = true) { (s4, _, hi) =>
       // sentinel: past every possible timeout (hi + gap) PLUS the watermark
       // delay, with margin — its arrival pushes the watermark beyond every
       // open session's close
       val sentinel = new java.sql.Timestamp(
         hi.getTime + 31L * 24 * 3600 * 1000 + gapMinutes * 60L * 1000)
-      import s8.implicits._
+      import s4.implicits._
       Seq(Seq((-1L, sentinel)).toDF("user_id", "ts"))
     }
-    import s8.implicits._ // SessionEvent encoder for .as[] below
+    import s4.implicits._ // SessionEvent encoder for .as[] below
     // delay 1 day: with time-ordered files nothing real is ever late (each
     // batch's min ts ≥ the prior watermark already), and the sentinel
     // clears it by a month
-    Stateful.sessionize(s8,
+    toParquet(s, Stateful.sessionize(s4,
         stream.withWatermark("ts", "1 day").as[Stateful.SessionEvent],
         gapUs)
-      .filter(col("user_id") >= 0L)
-      .writeStream
-      .queryName(uniqueName("graft-stream-session"))
-      .option("checkpointLocation", dir + "/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", out)
-      .start().awaitTermination()
-    s.read.parquet(out).select(
+      .filter(col("user_id") >= 0L).toDF(), dir).select(
       timestamp_micros(col("start_us")).as("session_start"),
       timestamp_micros(col("end_us")).as("session_end"),
       col("user_id"), col("n_events"))
@@ -780,7 +709,7 @@ object Declared {
     val src = writeSrc(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst")), nFiles = 2)
     // runs on the caller's session: batch 0 folds onto the empty labeling
-    val labels = runFold(s, s, src, dir, "graft-stream-cc") { (prev, batch) =>
+    val labels = runFold(s, src, dir, width = None) { (prev, batch) =>
       graft.operators.GraphOps.incrementalComponents(
         prev.getOrElse(noLabels), batch)
     }.getOrElse(noLabels)
@@ -796,17 +725,12 @@ object Declared {
     // 2 micro-batches: batch 1 bootstraps the state, batch 2 proves the
     // cross-batch fold (union -> LWW -> rewrite); more batches only re-pay
     // the full-state rewrite.
-    // Stateless foreachBatch fold: per-batch work is one small LWW window,
-    // so 4 shuffle partitions beats the session default (the
-    // changesMaintain knob, A/B'd per key r11 — NOT the stateful-family
-    // setting, whose state stores size to shuffle.partitions)
-    val s4 = sized(s, 4)
     val src = writeSrc(
       events.select("event_id", "ts", "user_id", "event_type", "value"),
       nFiles = 2)
     // LWW's max-by-(ts,id) makes the replayed rewrite idempotent (the
     // runFold replay discipline)
-    runFold(s4, s, src, dir, "graft-stream-lww") { (prev, batch) =>
+    runFold(s, src, dir) { (prev, batch) =>
       val cur = prev.fold(batch)(p => batch.unionByName(p))
       graft.operators.Upserts.lwwView(cur, Seq("user_id"), "ts", Seq("event_id"))
     }
@@ -833,11 +757,8 @@ object Declared {
     def words(df: DataFrame) =
       df.select(explode(split(col(textCol), " ")).as("word"))
         .filter(col("word") =!= "")
-    // stateless fold: 4 shuffle partitions (the changesMaintain knob,
-    // A/B'd per key r11; sketch states are <=4k rows)
-    val s4 = sized(s, 4)
     val src = writeSrc(docs, nFiles = 2)
-    val state = runFold(s4, s, src, dir, "graft-stream-heavy-hitters") {
+    val state = runFold(s, src, dir) {
       (prev, batch) =>
         val bs = HeavyHitters.sketchState(words(batch), "word", k)
         prev.fold(bs)(p => HeavyHitters.mergeStates(p, bs, "word", k))
@@ -872,11 +793,8 @@ object Declared {
                            threshold: Double, maxBucket: Int,
                            dir: String): DataFrame = {
     import graft.operators.DedupOps
-    // stateless fold: 4 shuffle partitions (the changesMaintain knob,
-    // A/B'd per key r11; per-batch signature rows are bounded by the slice)
-    val s4 = sized(s, 4)
     val src = writeSrc(docs.select(col(idCol), col(textCol)), nFiles = 2)
-    runFold(s4, s, src, dir, "graft-stream-minhash") { (prev, batch) =>
+    runFold(s, src, dir) { (prev, batch) =>
       val bs = DedupOps.minhashFixedSignatures(batch, idCol, textCol, k,
         bands * rowsPerBand)
       prev.fold(bs)(_.unionByName(bs))
@@ -934,12 +852,9 @@ object Declared {
                                threshold: Double, maxBucket: Int,
                                dir: String): DataFrame = {
     import graft.operators.{DedupOps, TextOps}
-    // stateless fold: 4 shuffle partitions (the changesMaintain knob;
-    // per-batch state rows are bounded by the arriving slice)
-    val s4 = sized(s, 4)
     val src = writeSrc(docs.select(col("doc_id"), col("text"),
       col("n_chars")), nFiles = 2)
-    val state = runFold(s4, s, src, dir, "graft-stream-pipeline") {
+    val state = runFold(s, src, dir) {
       (prev, batch) =>
         val qual = TextOps.qualityMetrics(batch)
           .filter(col("n_words") >= 5 && col("dedup_ratio") >= 0.3)
@@ -992,11 +907,8 @@ object Declared {
     import graft.operators.VectorOps
     val cents = VectorOps.lloydCentroids(emb, idCol, vecCol, nCentroids,
       iters = 1)
-    // stateless fold: 4 shuffle partitions (the changesMaintain knob;
-    // per-batch index rows are bounded by the arriving slice)
-    val s4 = sized(s, 4)
     val src = writeSrc(emb.select(col(idCol), col(vecCol)), nFiles = 2)
-    val index = runFold(s4, s, src, dir, "graft-stream-ivf") { (prev, batch) =>
+    val index = runFold(s, src, dir) { (prev, batch) =>
       val bs = VectorOps.ivfEncode(batch, idCol, vecCol, cents)
       prev.fold(bs)(_.unionByName(bs))
     }.getOrElse(sys.error(
@@ -1035,14 +947,12 @@ object Declared {
     import graft.operators.{TextOps, VectorOps}
     val cents = VectorOps.lloydCentroids(emb, "vec_id", "embedding",
       nCentroids, iters = 1)
-    // stateless folds: 4 shuffle partitions (the changesMaintain knob)
-    val s4 = sized(s, 4)
     // the two INDEPENDENT folds run CONCURRENTLY (guide §2.6 — overlap
     // independent jobs): each is its own
     // AvailableNow run over its own source, checkpoint, and FoldState
     // dirs, so one fold's per-micro-batch driver gaps (offset/commit log,
     // next-batch planning) back-fill with the other's work instead of
-    // serializing. Stream names are uniqueName-suffixed and nothing
+    // serializing. The streams carry no name to clash and nothing
     // shared is mutated; both final states are identical to the
     // sequential run's, so the served output is unchanged (r21: the two
     // folds were ~0.9 s of the key's ~2.3 s, almost fully overlapped).
@@ -1058,13 +968,11 @@ object Declared {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
-      val postingsF = Future(blocking(runFold(s4, s, docSrc, dir + "/lex",
-          "graft-stream-hyblex") { (prev, batch) =>
+      val postingsF = Future(blocking(runFold(s, docSrc, dir + "/lex") { (prev, batch) =>
         val bs = TextOps.docPostings(batch, "doc_id", "text")
         prev.fold(bs)(_.unionByName(bs))
       }))
-      val indexF = Future(blocking(runFold(s4, s, embSrc, dir + "/vec",
-          "graft-stream-hybvec") { (prev, batch) =>
+      val indexF = Future(blocking(runFold(s, embSrc, dir + "/vec") { (prev, batch) =>
         val bs = VectorOps.ivfEncode(batch, "vec_id", "embedding", cents)
         prev.fold(bs)(_.unionByName(bs))
       }))
@@ -1107,9 +1015,8 @@ object Declared {
                             idCol: String, textCol: String, cap: Int,
                             dir: String): DataFrame = {
     import graft.operators.TextOps
-    val s4 = sized(s, 4)
     val src = writeSrc(docs.select(col(idCol), col(textCol)), nFiles = 2)
-    runFold(s4, s, src, dir, "graft-stream-textindex") { (prev, batch) =>
+    runFold(s, src, dir) { (prev, batch) =>
       val bs = TextOps.invertedIndex(batch, idCol, textCol, cap)
       prev.fold(bs)(_.unionByName(bs)
         .groupBy("term")
@@ -1132,14 +1039,11 @@ object Declared {
   def driftMaintain(s: SparkSession, events: DataFrame, dir: String): DataFrame = {
     import graft.operators.StatsOps
     val ev = events.select(col("event_type"), col("ts"), col("value"))
-    // stateless fold: 4 shuffle partitions (the changesMaintain knob,
-    // A/B'd per key r11; the state is O(groups x grid bins))
-    val s4 = sized(s, 4)
     val src = writeSrc(ev, nFiles = 2)
     def counts(df: DataFrame) =
       StatsOps.ksCounts(df, "event_type",
         dayofweek(col("ts")).isin(1, 7), "value", gridScale = 1000L)
-    val state = runFold(s4, s, src, dir, "graft-stream-drift") {
+    val state = runFold(s, src, dir) {
       (prev, batch) =>
         val bs = counts(batch)
         prev.fold(bs)(p => StatsOps.mergeCounts(p, bs))
@@ -1160,11 +1064,8 @@ object Declared {
   def trendMaintain(s: SparkSession, events: DataFrame, dir: String): DataFrame = {
     import graft.operators.StatsOps
     val ev = events.select(col("event_type"), col("ts"), col("value"))
-    // stateless fold: 4 shuffle partitions (the changesMaintain knob,
-    // A/B'd per key r11; the state is five moments per group)
-    val s4 = sized(s, 4)
     val src = writeSrc(ev, nFiles = 2)
-    val state = runFold(s4, s, src, dir, "graft-stream-trend") {
+    val state = runFold(s, src, dir) {
       (prev, batch) =>
         val bs = StatsOps.olsCounts(batch, "event_type", "ts", "value")
         prev.fold(bs)(p => StatsOps.olsMerge(p, bs, "event_type"))
@@ -1193,8 +1094,8 @@ object Declared {
     def history(df: DataFrame): DataFrame =
       graft.operators.Temporal.scd2(df, Seq("user_id"), "ts",
         Seq("ts", "event_id"), Seq("event_type"))
-    runFold(sized(s, 8), s, orderedSrc(s, orderedHalves(ev, cut)), dir,
-        "graft-stream-scd2") { (prev, batch) =>
+    runFold(s, orderedSrc(s, orderedHalves(ev, cut)), dir,
+        width = Some(8)) { (prev, batch) =>
       // batch 0 folds onto a zero-row history in the scd2 shape
       graft.operators.Temporal.scd2Fold(prev.getOrElse(history(batch.limit(0))),
         batch, keyCols = Seq("user_id"), tsCol = "ts",
@@ -1264,26 +1165,22 @@ object Declared {
         col("value").as("value_before"), col("value").as("value_after"),
         lit(0).as("batch"))
     val cutUs = ((mm.getLong(0) + mm.getLong(1)) / 2 / DayUs) * DayUs + DayUs / 2
-    // stateless foreachBatch fold (no state store): the per-batch work is
-    // a small LWW window + diff, so 4 shuffle partitions beats 8 — this is
-    // NOT the stateful-family knob (sliding/session/scd2 keep 8, re-A/B'd
-    // r9; their state stores size to shuffle.partitions, this doesn't)
-    val s8 = sized(s, 4)
-    val stream = srcReader(s8, orderedSrc(s8, Seq(
+    // a stateless fold: 4 shuffle partitions, runFold's default width
+    val s4 = sized(s, 4)
+    val stream = srcReader(s4, orderedSrc(s4, Seq(
       ev.filter(unix_micros(col("ts")) < cutUs),
       ev.filter(unix_micros(col("ts")) >= cutUs))), 1)
     val fs = new FoldState(dir)
     val logDir = dir + "/changes"
     val lastBatch = new java.util.concurrent.atomic.AtomicLong(-1L)
     val crashArmed = new java.util.concurrent.atomic.AtomicBoolean(crash)
-    def run(): Unit = stream.writeStream
-      .queryName(uniqueName("graft-stream-changes"))
-      .option("checkpointLocation", dir + "/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    // only the planned crash run is named, so the log config can silence
+    // its expected error and no other; the UUID keeps concurrent runs apart
+    def run(name: Option[String]): Unit = runStream(stream, dir)(w =>
+      name.fold(w)(w.queryName).foreachBatch { (batch: DataFrame, batchId: Long) =>
         val prev =
           if (batchId == 0L) batch.limit(0)
-          else fs.read(s8, batchId - 1)
+          else fs.read(s4, batchId - 1)
         // cur feeds BOTH writes (delta, then state — log-first is the
         // crash-ordering RestartRecoverySpec pins); cache so the LWW
         // window runs once per batch, not once per consumer
@@ -1304,11 +1201,10 @@ object Declared {
         } finally cur.unpersist()
         lastBatch.updateAndGet(m => math.max(m, batchId))
         ()
-      }
-      .start().awaitTermination()
+      })
     if (crash) {
       try {
-        run()
+        run(Some(s"graft-planned-crash-${java.util.UUID.randomUUID()}"))
         throw new IllegalStateException(
           "crash run completed without crashing — injection never fired")
       } catch {
@@ -1323,7 +1219,7 @@ object Declared {
       require(!crashArmed.get(),
         "injected crash must have fired before the recovery run")
     }
-    run()
+    run(None)
     if (lastBatch.get() < 0L)
       ev.limit(0).select(col("user_id"), col("d"), lit("").as("change"),
         col("value").as("value_before"), col("value").as("value_after"),

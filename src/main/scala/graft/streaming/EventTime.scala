@@ -1,37 +1,20 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Event-time helpers shared by the batch-declared queries and their
-  * streaming twins: the SAME aggregation bodies run under `groupBy` in batch
-  * and under `withWatermark` + `groupBy` in streaming, so correctness is
-  * checkable against the DuckDB oracle in batch while the streaming path is
-  * exercised by specs with file/memory sources.
+/** Watermarked event-time helpers for streams over file or memory
+  * sources. The declared stream rigs in [[Declared]] build their own
+  * bodies and do not use these.
   */
 object EventTime {
 
-  /** Tumbling-window counts+sums per key. */
+  /** Tumbling-window counts per key. */
   def tumbling(df: DataFrame, ts: String, key: String, width: String): DataFrame =
     df.groupBy(window(col(ts), width), col(key))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("window_start"),
         col("window.end").as("window_end"), col(key), col("n"))
-
-  /** Sliding-window counts per key. */
-  def sliding(df: DataFrame, ts: String, key: String, width: String,
-              slide: String): DataFrame =
-    df.groupBy(window(col(ts), width, slide), col(key))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"), col(key), col("n"))
-
-  /** Session windows per key with a fixed inactivity gap. */
-  def sessions(df: DataFrame, ts: String, key: String, gap: String): DataFrame =
-    df.groupBy(session_window(col(ts), gap), col(key))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"), col(key), col("n_events"))
 
   /** Watermarked variants for streaming use: late rows beyond `delay` are
     * dropped by the engine (reference has no event-time notion — this is the
@@ -39,10 +22,6 @@ object EventTime {
   def tumblingStream(df: DataFrame, ts: String, key: String, width: String,
                      delay: String): DataFrame =
     tumbling(df.withWatermark(ts, delay), ts, key, width)
-
-  def sessionsStream(df: DataFrame, ts: String, key: String, gap: String,
-                     delay: String): DataFrame =
-    sessions(df.withWatermark(ts, delay), ts, key, gap)
 
   /** Streaming exact dedup within the watermark horizon. */
   def dedupStream(df: DataFrame, ts: String, keys: Seq[String],

@@ -21,12 +21,18 @@ import graft.sources.Codecs
   * may evolve between batches; both are driver-side decisions Structured
   * Streaming cannot express in a single fixed-schema sink (SURVEY §2.B).
   *
-  * Delivery is at-least-once: a replayed batch appends its rows again.
-  * Rows with an explicit `id` converge under the LWW read view, as
-  * Cassandra upserts did for the reference. Rows whose `id` is generated
-  * do not: a replay appends them again under fresh ids, and their
-  * quarantine rows twice. A per-(stream, batchId, type) idempotent append
-  * would close this; none exists yet.
+  * A poison message becomes a dead letter or a quarantine row and the
+  * stream goes on. A batch whose ingest or maintenance throws fails the
+  * query instead: its offsets are not committed, and a restart on the same
+  * checkpoint replays it. Delivery is so at-least-once: types that
+  * appended before the failure append again on the replay. Rows with an
+  * explicit `id` converge under the LWW read view, as Cassandra upserts did
+  * for the reference. Rows whose `id` is generated do not: a replay appends
+  * them again under fresh ids, and their quarantine rows twice. A
+  * per-(stream, batchId, type) idempotent append would close this; none
+  * exists yet.
+  *
+  * Queries carry no name, so any number of them can run on one session.
   */
 object StreamingIngest {
 
@@ -64,11 +70,11 @@ object StreamingIngest {
             trigger: Trigger = Trigger.AvailableNow(),
             writer: Option[String] = None,
             grants: Option[DataFrame] = None): StreamingQuery = {
-    // fail at start, not inside the per-batch catch (which would silently
-    // skip every batch): a gated stream without grants is a config error
+    // a gated stream without grants is a config error: fail at start, not
+    // in the first batch
     require(writer.isEmpty || grants.nonEmpty,
       "start(writer = ...) requires the grants frame")
-    run("graft-ingest", h, envelopes, checkpointDir, trigger, writer, grants)(())
+    run(h, envelopes, checkpointDir, trigger, writer, grants)(())
   }
 
   /** [[start]] plus post-batch maintenance: after each micro-batch, any
@@ -94,8 +100,7 @@ object StreamingIngest {
                            grants: Option[DataFrame] = None): StreamingQuery = {
     require(writer.isEmpty || grants.nonEmpty,
       "startWithMaintenance(writer = ...) requires the grants frame")
-    run("graft-ingest-maint", h, envelopes, checkpointDir, trigger, writer,
-        grants) {
+    run(h, envelopes, checkpointDir, trigger, writer, grants) {
       implicit val ec: ExecutionContext = Ingest.ingestPool
       val runs = h.registry.knownTypes.filterNot(_ == "descriptor_model")
         .map(t => Future(h.compactIfNeeded(t, maxFilesPerType)))
@@ -105,33 +110,21 @@ object StreamingIngest {
   }
 
   /** The consumer loop both entry points share: each micro-batch runs the
-    * (optionally write-gated) batch ingest, then `afterBatch`. */
-  private def run(name: String, h: Engine.Handle, envelopes: DataFrame,
+    * (optionally write-gated) batch ingest, then `afterBatch`. A throw from
+    * either fails the query before the batch commits. */
+  private def run(h: Engine.Handle, envelopes: DataFrame,
                   checkpointDir: String, trigger: Trigger,
                   writer: Option[String], grants: Option[DataFrame])(
                   afterBatch: => Unit): StreamingQuery =
     envelopes.writeStream
-      .queryName(name)
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-batch failure isolation (reference consumer.py:78-83): a
-        // failing batch is logged and skipped, and its offsets still
-        // commit, so it is never replayed: types that appended before the
-        // failure keep their rows, and the failing type's rows are neither
-        // written nor quarantined, a known gap in the never-lose-a-row
-        // contract
-        try {
-          writer match {
-            case Some(u) => h.ingestAs(u, grants.get, batch)
-            case None => h.ingest(batch)
-          }
-          afterBatch
-        } catch {
-          case e: Exception =>
-            System.err.println(s"[graft-ingest] batch $batchId failed: ${e.getMessage}")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        writer match {
+          case Some(u) => h.ingestAs(u, grants.get, batch)
+          case None => h.ingest(batch)
         }
-        ()
+        afterBatch
       }
       .start()
 }

@@ -435,6 +435,20 @@ class DeclaredSpec extends SparkSpec {
     assert(crossJvmCache() === cacheBefore)
   }
 
+  test("two concurrent runs of one sized-child rig on one parent both complete") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    // a first run stages the source, so the pair below reaches its stream
+    // starts together on the shared child session
+    val expected = rows(Queries.qStreamDrift(spark, sf()))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val runs = Seq.fill(2)(Future(rows(Queries.qStreamDrift(spark, sf()))))
+      runs.foreach(r => assert(Await.result(r, Duration(300, "s")) == expected))
+    } finally pool.shutdown()
+  }
+
   test("a rig's child session follows its parent's runtime conf; its overrides win") {
     val parent = spark.newSession()
     val width = Map("spark.sql.shuffle.partitions" -> "5")

@@ -219,6 +219,76 @@ class StreamingSpec extends SparkSpec {
     assert(err.getMessage.contains("requires the grants frame"))
   }
 
+  test("a batch whose write fails stops the query uncommitted; a restart " +
+      "replays it and serves every row once") {
+    val srcDir = tmpDir("graft-stream-fail-src")
+    val ckpt = tmpDir("graft-stream-fail-ckpt")
+    writeJsonFiles(srcDir, Seq(
+      Seq("""{"m":{"type_id":"f1","data":{"id":"a","v":1}}}"""),
+      Seq("""{"m":{"type_id":"f1","data":{"id":"b","v":2}}}""",
+          """{"m":{"type_id":"f2","data":{"id":"x","w":"p"}}}"""),
+      Seq("""{"m":{"type_id":"f1","data":{"id":"c","v":3}}}""",
+          """{"m":{"type_id":"f2","data":{"id":"y","w":"q"}}}""")))
+    val h = Engine.bootstrap(spark, tmpDir("graft-stream-fail-wh"))
+    // f2 first arrives in the second batch; a regular file where its table
+    // dir belongs makes that batch's append throw
+    val blocker = new java.io.File(h.registry.tablePath("f2"))
+    blocker.getParentFile.mkdirs()
+    assert(blocker.createNewFile())
+    def stream() = spark.readStream
+      .schema(StructType(Seq(StructField("m", StringType))))
+      .option("maxFilesPerTrigger", "1")
+      .json(srcDir)
+      .select(col("m").as("message"))
+
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamingIngest.start(h, stream(), ckpt).awaitTermination(120000)
+    }
+    val chain = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).take(32).toSeq
+    assert(chain.exists(_.isInstanceOf[java.io.IOException]),
+      s"no write error in the cause chain:\n${chain.mkString("\n")}")
+    def committed(b: Int) = new java.io.File(ckpt, s"commits/$b").exists()
+    assert(committed(0) && !committed(1), "the failed batch must not commit")
+
+    assert(blocker.delete())
+    StreamingIngest.start(h, stream(), ckpt).awaitTermination(120000)
+    assert(committed(1) && committed(2))
+    def served(t: String) =
+      h.table(t).select("id").as[String].collect().sorted.toSeq
+    assert(served("f1") === Seq("a", "b", "c"))
+    assert(served("f2") === Seq("x", "y"))
+  }
+
+  test("two StreamingIngest queries run on one session at the same time") {
+    import org.apache.spark.sql.streaming.Trigger
+    val live = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[String](spark)
+    val hLive = Engine.bootstrap(spark, tmpDir("graft-stream-two-wh1"))
+    val q1 = StreamingIngest.start(hLive,
+      live.toDF().select(col("value").as("message")),
+      tmpDir("graft-stream-two-ckpt1"), Trigger.ProcessingTime("100 milliseconds"))
+    try {
+      live.addData("""{"type_id":"t1","data":{"id":"a","v":1}}""")
+      q1.processAllAvailable()
+      val srcDir = tmpDir("graft-stream-two-src")
+      writeJsonFiles(srcDir, Seq(
+        Seq("""{"m":{"type_id":"t2","data":{"id":"b","v":2}}}""")))
+      val hFile = Engine.bootstrap(spark, tmpDir("graft-stream-two-wh2"))
+      val q2 = StreamingIngest.start(hFile, spark.readStream
+          .schema(StructType(Seq(StructField("m", StringType))))
+          .json(srcDir).select(col("m").as("message")),
+        tmpDir("graft-stream-two-ckpt2"))
+      assert(q1.isActive, "the first query is still running")
+      q2.awaitTermination(120000)
+      live.addData("""{"type_id":"t1","data":{"id":"c","v":3}}""")
+      q1.processAllAvailable()
+      assert(hLive.table("t1").select("id").as[String].collect().sorted.toSeq
+        === Seq("a", "c"))
+      assert(hFile.table("t2").select("id").as[String].collect().toSeq === Seq("b"))
+    } finally q1.stop()
+  }
+
   test("kafka wiring: loads with the connector, fails ONLY for jar absence without") {
     // the container ships no spark-sql-kafka jar; on a real cluster this
     // same test validates the stream frame shape. Either way it pins that
