@@ -131,12 +131,9 @@ object Declared {
     * in one plan), or None if the source produced no micro-batches.
     *
     * The fold runs on a [[sized]] child of `width` shuffle partitions, or
-    * on `s` itself when `width` is None. The default of 4 suits a
-    * stateless fold: its per-batch work is one small merge onto bounded
-    * state, so 4 partitions beat the session default (A/B'd per key,
-    * r11). The stateful rigs size their state stores separately. */
+    * on `s` itself when `width` is None; the default is [[FoldWidth]]. */
   private def runFold(s: SparkSession, src: String, dir: String,
-                      width: Option[Int] = Some(4))
+                      width: Option[Int] = Some(FoldWidth))
                      (fold: (Option[DataFrame], DataFrame) => DataFrame): Option[DataFrame] = {
     val on = width.fold(s)(sized(s, _))
     val fs = new FoldState(dir)
@@ -150,6 +147,17 @@ object Declared {
       })
     if (lastBatch.get() < 0L) None else Some(fs.read(s, lastBatch.get()))
   }
+
+  /** Shuffle width of a stateless fold ([[runFold]], changesMaintain):
+    * its per-batch work is one small merge onto bounded state, so 4
+    * partitions beat the session default (A/B'd per key, r11). The
+    * stateful rigs size their state stores separately. */
+  private val FoldWidth = 4
+
+  /** Name prefix of q_stream_changes_restart's planned crash run, the one
+    * named query: `log4j2.properties` denies MicroBatchExecution messages
+    * that start `Query <prefix>`. */
+  private[graft] val PlannedCrashPrefix = "graft-planned-crash-"
 
   /** The one way a rig runs its stream: checkpoint at `dir/ckpt`,
     * `Trigger.AvailableNow`, started and awaited to completion; `sink`
@@ -1165,8 +1173,7 @@ object Declared {
         col("value").as("value_before"), col("value").as("value_after"),
         lit(0).as("batch"))
     val cutUs = ((mm.getLong(0) + mm.getLong(1)) / 2 / DayUs) * DayUs + DayUs / 2
-    // a stateless fold: 4 shuffle partitions, runFold's default width
-    val s4 = sized(s, 4)
+    val s4 = sized(s, FoldWidth)
     val stream = srcReader(s4, orderedSrc(s4, Seq(
       ev.filter(unix_micros(col("ts")) < cutUs),
       ev.filter(unix_micros(col("ts")) >= cutUs))), 1)
@@ -1174,8 +1181,11 @@ object Declared {
     val logDir = dir + "/changes"
     val lastBatch = new java.util.concurrent.atomic.AtomicLong(-1L)
     val crashArmed = new java.util.concurrent.atomic.AtomicBoolean(crash)
-    // only the planned crash run is named, so the log config can silence
-    // its expected error and no other; the UUID keeps concurrent runs apart
+    // only the planned crash run is named (PlannedCrashPrefix + a UUID that
+    // keeps concurrent runs apart), and the log config denies every
+    // MicroBatchExecution message of that query: ANY failure of that run,
+    // not only the injected one, loses Spark's ERROR log and surfaces only
+    // as the StreamingQueryException rethrown below
     def run(name: Option[String]): Unit = runStream(stream, dir)(w =>
       name.fold(w)(w.queryName).foreachBatch { (batch: DataFrame, batchId: Long) =>
         val prev =
@@ -1204,7 +1214,7 @@ object Declared {
       })
     if (crash) {
       try {
-        run(Some(s"graft-planned-crash-${java.util.UUID.randomUUID()}"))
+        run(Some(PlannedCrashPrefix + java.util.UUID.randomUUID()))
         throw new IllegalStateException(
           "crash run completed without crashing — injection never fired")
       } catch {

@@ -471,4 +471,16 @@ class DeclaredSpec extends SparkSpec {
     // other overrides get their own child
     assert(graft.Sessions.child(parent, Map("spark.sql.shuffle.partitions" -> "3")) ne c)
   }
+
+  test("the log config denies the planned crash run's messages and no unnamed query's") {
+    val props = new java.util.Properties()
+    val in = getClass.getResourceAsStream("/log4j2.properties")
+    try props.load(in) finally in.close()
+    val deny = java.util.regex.Pattern.compile(
+      props.getProperty("logger.microbatch.filter.quiet.regex"))
+    val ids = "[id = 1, runId = 2]"
+    assert(deny.matcher(s"Query ${Declared.PlannedCrashPrefix}${java.util.UUID.randomUUID()}" +
+      s" $ids terminated with error").matches())
+    assert(!deny.matcher(s"Query $ids terminated with error").matches())
+  }
 }
